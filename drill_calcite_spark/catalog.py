@@ -14,6 +14,7 @@ in .explain). No caching by default: at 100 TB you cache nothing blindly.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -177,15 +178,18 @@ def register_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[s
 # scope (SURVEY §2.4: a 1000-executor cluster needs block allocation
 # from a coordination service, not a driver dict); this surface covers
 # the reference's actual sequence test matrix — session DDL + small
-# statements — and fails loudly on unknown names.
+# statements — and fails loudly on unknown names. Clients share one
+# session across threads, so every mutation holds _SEQ_LOCK.
 
 _SEQUENCES: "dict[str, dict]" = {}
+_SEQ_LOCK = threading.Lock()
 
 
 def create_sequence(name: str, start: int = 1, increment: int = 1) -> None:
     """(Re)create a sequence — resets its counter (fixture semantics)."""
-    _SEQUENCES[name.lower()] = {
-        "next": start, "inc": increment, "start": start}
+    with _SEQ_LOCK:
+        _SEQUENCES[name.lower()] = {
+            "next": start, "inc": increment, "start": start}
 
 
 def get_sequence(name: str) -> "dict | None":
@@ -193,8 +197,9 @@ def get_sequence(name: str) -> "dict | None":
 
 
 def advance_sequence(name: str, n_rows: int) -> None:
-    seq = _SEQUENCES[name.lower()]
-    seq["next"] += n_rows * seq["inc"]
+    with _SEQ_LOCK:
+        seq = _SEQUENCES[name.lower()]
+        seq["next"] += n_rows * seq["inc"]
 
 
 def sequence_names() -> "list[str]":

@@ -36,12 +36,16 @@ over which implication is decidable without a full RexImplication engine.
 Scale notes: tiles are parquet, typically 10^3-10^6× smaller than the
 fact table; the rollup is a shuffle over the tile only. Tile freshness is
 the caller's contract (rebuild on data change), exactly as with Calcite's
-materializations.
+materializations. Each tile snapshot's read plan is built once per
+registry (``MaterializedViews.tile_frame``), so a serve pays no file
+listing or schema inference.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import functools
+import operator
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
@@ -67,18 +71,19 @@ def _tile_col(op: str, col: str) -> str:
     return f"__{op}_{col}"
 
 
+# each Column operator is a py4j round trip: build only the one asked for
+_CMP = {"=": operator.eq, "<": operator.lt, "<=": operator.le,
+        ">": operator.gt, ">=": operator.ge}
+
+
 def _atom_cond(atom: Atom) -> Column:
     c, op, v = atom
-    col = F.col(c)
-    return {"=": col == v, "<": col < v, "<=": col <= v,
-            ">": col > v, ">=": col >= v}[op]
+    return _CMP[op](F.col(c), v)
 
 
 def _conj(atoms: list[Atom] | tuple[Atom, ...]) -> Column:
-    cond = F.lit(True)
-    for a in atoms:
-        cond = cond & _atom_cond(a)
-    return cond
+    """AND of a NON-EMPTY atom list."""
+    return functools.reduce(operator.and_, map(_atom_cond, atoms))
 
 
 def _implies(q: Atom, p: Atom) -> bool:
@@ -139,6 +144,24 @@ class MaterializedViews:
     # snapshot swap incremental_refresh performs.
     _by_table: dict = field(default_factory=dict)
     _by_member: dict = field(default_factory=dict)
+    # tile snapshot path -> its lazy read plan (tile_frame)
+    _frames: dict = field(default_factory=dict, repr=False, compare=False)
+
+    def tile_frame(self, tile: _Tile) -> DataFrame:
+        """The lazy ``spark.read.parquet`` plan of ``tile``'s snapshot,
+        built once per path: ``spark.read.parquet`` lists the files and
+        infers the schema on every call, which costs a tile hit more
+        than its rollup plan does. Memo contract (the same as
+        catalog.read_table's table-plan memo): it holds PLANS, never
+        data, so every action re-scans the parquet; a snapshot path is
+        immutable while registered, and the entry is dropped when
+        ``create`` (re)writes the path or ``incremental_refresh`` swaps
+        in a new snapshot."""
+        df = self._frames.get(tile.path)
+        if df is None:
+            df = self._frames.setdefault(
+                tile.path, self.spark.read.parquet(tile.path))
+        return df
 
     def _tiles_for(self, table: str):
         return (self.tiles[i] for i in self._by_table.get(table, ()))
@@ -199,6 +222,7 @@ class MaterializedViews:
             src = base.filter(_conj(watoms)) if watoms else base
             (src.groupBy(*dims).agg(*aggs)
              .write.mode("overwrite").parquet(path))
+            self._frames.pop(path, None)
         self.tiles.append(
             _Tile(name, table, tuple(dims), frozenset(ops), path, watoms)
         )
@@ -353,7 +377,7 @@ class MaterializedViews:
             src = base.filter(_conj(list(where))) if where else base
             return src.groupBy(*dims).agg(*aggs)
         tile, residual = hit
-        tdf = self.spark.read.parquet(tile.path)
+        tdf = self.tile_frame(tile)
         if residual:
             tdf = tdf.filter(_conj(residual))
         aggs = [self._rollup_agg(op, col).alias(out)
@@ -402,7 +426,7 @@ class MaterializedViews:
             else:
                 aggs.append(getattr(F, op)(col).alias(_tile_col(op, col)))
         delta_tile = src.groupBy(*tile.dims).agg(*aggs)
-        old = self.spark.read.parquet(tile.path)
+        old = self.tile_frame(tile)
         merge = []
         for op, col in sorted(tile.ops):
             tc = _tile_col(op, col)
@@ -418,6 +442,8 @@ class MaterializedViews:
             if "__v" in tile.path else 1
         new_path = f"{base_path}__v{version}"
         merged.write.mode("overwrite").parquet(new_path)
+        for p in (tile.path, new_path):
+            self._frames.pop(p, None)
         # in-place positional swap keeps the probe index valid; replace()
         # carries every field (incl. join composition metadata) — only
         # the snapshot path changes
@@ -505,7 +531,7 @@ class MaterializedViews:
         hit = self.find_tile(sig, probe, measures, where)
         if hit is not None:
             tile, residual = hit
-            tdf = self.spark.read.parquet(tile.path)
+            tdf = self.tile_frame(tile)
             if residual:
                 tdf = tdf.filter(_conj(residual))
             aggs = [self._rollup_agg(op, col).alias(out)

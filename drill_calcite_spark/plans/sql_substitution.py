@@ -98,12 +98,21 @@ algebra produces the SELECT list in its original order and names.
 
 Scale notes: the substituted plan scans ONLY the tile parquet —
 typically 10^3-10^6× smaller than the fact table — and its rollup
-shuffles tile rows, not base rows. The probe itself is O(#tiles)
-driver-side string work per statement.
+shuffles tile rows, not base rows. The probe itself is driver-side
+string work plus dict lookups per statement. A hit starts from the
+tile's memoized read plan (``MaterializedViews.tile_frame``: a plan,
+never data; snapshot paths are immutable while registered, and the
+memo entry is dropped on ``create`` and ``incremental_refresh``), so
+it pays no file listing or schema inference, only the py4j calls that
+build the rollup. A miss costs no Spark call unless a join-MV indexes
+the statement's table, when the FK-derivable check reads that table's
+schema.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -613,14 +622,16 @@ def try_substitute(spark: SparkSession, text: str,
     probe_dims = group_cols + [c for c in dict.fromkeys(cd_cols)
                                if c not in group_cols]
     hit = mvs.find_tile(table, probe_dims, measures + hidden, atoms)
-    if hit is None and join_tables is None:
+    if hit is None and join_tables is None and table in mvs._by_member:
         # FK-derivable subset unification: a single-table aggregate can
         # be served from a JOIN-MV that joins the table to more tables,
         # when every extra table hangs off a registered FK (the join
         # preserves the kept rows 1:1) AND the query references only
         # the base table's own columns — checked against the table's
         # actual schema (driver-side metadata, no job), so a dropped-
-        # table column can never be silently served.
+        # table column can never be silently served. The schema read
+        # is a Spark call, so it runs only when some join-MV indexes
+        # this table; otherwise find_derivable_tile cannot hit.
         refs = (set(probe_dims)
                 | {col for _o, _op, col in measures + hidden
                    if col != "*"}
@@ -645,15 +656,12 @@ def try_substitute(spark: SparkSession, text: str,
     if any(a[0] not in tile.dims
            for branches in oratoms for br in branches for a in br):
         return None
-    tdf = spark.read.parquet(tile.path)
-    if residual:
-        tdf = tdf.filter(_conj(residual))
-    for branches in oratoms:
-        cond = None
-        for br in branches:
-            c = _conj(br)
-            cond = c if cond is None else cond | c
-        tdf = tdf.filter(cond)
+    tdf = mvs.tile_frame(tile)
+    conds = [_conj(residual)] if residual else []
+    conds += [functools.reduce(operator.or_, map(_conj, branches))
+              for branches in oratoms]
+    if conds:
+        tdf = tdf.filter(functools.reduce(operator.and_, conds))
     aggs = [MaterializedViews._rollup_agg(op, col).alias(out)
             for out, op, col in measures + hidden]
     aggs += [F.grouping(col).cast("bigint").alias(g)
@@ -686,10 +694,16 @@ def try_substitute(spark: SparkSession, text: str,
     for op, _col, cmp, val in havings:
         h = next(giter)[0] if op == "grouping" else next(hiter)[0]
         rolled = rolled.filter(_atom_cond((h, cmp, val)))
-    final = [F.col(it[1]).alias(it[2]) if it[0] == "dim"
-             else F.col(it[3]) if it[0] == "agg"
-             else F.col(it[2]) for it in items]
-    out = rolled.select(*final)
+    # the rollup already is the SELECT list when its columns carry the
+    # item names in item order (no dim alias, no hidden HAVING column):
+    # then the projection would only cost an analysis pass and a py4j
+    # round trip per column
+    names = [it[-1] for it in items]
+    sources = [it[1] if it[0] == "dim" else it[-1] for it in items]
+    out = rolled
+    if not sources == names == rolled.columns:
+        out = rolled.select(*[F.col(it[1]).alias(it[2]) if it[0] == "dim"
+                              else F.col(it[-1]) for it in items])
     if order:
         def key(c: str, asc: bool, nulls: "str | None"):
             col = F.col(c)

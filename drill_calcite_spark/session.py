@@ -61,6 +61,17 @@ def get_spark(
         # --- python boundary: Arrow batches for the pandas-UDF operators ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # PySpark 4 records the Python call site of every DataFrame and
+        # Column call (pyspark/errors/utils.py _with_origin): a session
+        # lookup, a conf read, then setting and clearing the origin, all
+        # py4j round trips. Building one MV-served statement took 358
+        # round trips with it and 101 without. Turning it off costs only
+        # the Python file:line origin in an error's query context: errors
+        # still raise. Set here, on the engine's own session only;
+        # catalog.ensure_semantics leaves a caller's session as it is.
+        # PySpark reads the setting once per process, from the session
+        # active at the first DataFrame or Column call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # --- DDL surface: managed CREATE TABLE targets land in a
         # per-process scratch warehouse, never the repo cwd (the quidem
         # blank-schema cases create real tables) ---

@@ -553,7 +553,8 @@ def test_sql_substitution_follows_incremental_refresh(spark, tmp_path):
     """Front door × incremental refresh: after a delta batch is merged
     (which REPOINTS the tile to a new versioned snapshot), the same SQL
     must be served from the NEW tile version and reflect the delta —
-    the registry handle, not a stale path, is what the door consults."""
+    the registry handle, not a stale path, is what the door consults,
+    and the memoized read plan of the old snapshot is dropped."""
     from drill_calcite_spark.plans.materialized import MaterializedViews
     from drill_calcite_spark.plans.sql_substitution import try_substitute
 
@@ -565,10 +566,14 @@ def test_sql_substitution_follows_incremental_refresh(spark, tmp_path):
     text = "SELECT k, sum(v) AS s, min(v) AS lo FROM t GROUP BY k"
     before = {r.k: (r.s, r.lo)
               for r in try_substitute(spark, text, mvs).collect()}
+    v0 = mvs.tile_frame(mvs.tiles[0])
 
     delta = spark.createDataFrame(
         [("a", "z", 0.5), ("c", "x", 7.0)], "k string, sub string, v double")
     mvs.incremental_refresh("tile", delta)
+    assert mvs.tile_frame(mvs.tiles[0]) is not v0
+    assert list(mvs._frames) == [mvs.tiles[0].path], \
+        "the swapped-out snapshot's plan stayed in the memo"
     out = try_substitute(spark, text, mvs)
     assert out is not None
     files = out.inputFiles()
@@ -945,3 +950,43 @@ def test_fk_subset_snowflake_chain_peels_leaf_first(spark, tmp_path):
     assert out is not None and all("snowtile" in f for f in out.inputFiles())
     assert sorted(map(tuple, out.collect())) \
         == sorted(map(tuple, spark.sql(sub).collect()))
+
+
+# ------------------------------------------------ tile read-plan memo
+
+def test_tile_frame_memo_is_one_lazy_plan_per_tile(spark, tmp_path):
+    """tile_frame hands out ONE read plan per tile snapshot, and that
+    plan is never a data cache (same contract as the catalog's table
+    memo, test_catalog_memo.py)."""
+    mvs = _mvs(spark, tmp_path)
+    mvs.create("tile2", "t", _base(spark), ["k"], [("sum", "v")],
+               str(tmp_path / "tile2"))
+    t1, t2 = mvs.tiles
+    f1 = mvs.tile_frame(t1)
+    assert mvs.tile_frame(t1) is f1
+    assert mvs.tile_frame(t2) is not f1
+    assert f1.storageLevel.useMemory is False
+    assert f1.storageLevel.useDisk is False
+
+
+def test_tile_frame_memo_dropped_when_create_overwrites(spark, tmp_path):
+    """Re-running create at the SAME path (mode overwrite) must serve
+    the new contents — a memoized plan would hold the old file listing."""
+    from drill_calcite_spark.plans.sql_substitution import try_substitute
+
+    path = str(tmp_path / "otile")
+    old = spark.createDataFrame([("a", 1.0), ("b", 2.0)], "k string, v double")
+    new = spark.createDataFrame(
+        [("a", 10.0), ("c", 3.0), ("c", 4.0)], "k string, v double")
+    text = "SELECT k, count(*) AS n, sum(v) AS s FROM t GROUP BY k"
+    mvs = MaterializedViews(spark)
+    mvs.create("tile", "t", old, ["k"], [("sum", "v")], path)
+    served_old = try_substitute(spark, text, mvs).collect()
+    assert sorted(map(tuple, served_old)) == [("a", 1, 1.0), ("b", 1, 2.0)]
+    mvs.create("tile", "t", new, ["k"], [("sum", "v")], path)
+    out = try_substitute(spark, text, mvs)
+    assert out is not None and all("otile" in f for f in out.inputFiles())
+    new.createOrReplaceTempView("t")
+    assert sorted(map(tuple, out.collect())) \
+        == sorted(map(tuple, spark.sql(text).collect())) \
+        == [("a", 1, 10.0), ("c", 2, 7.0)]
