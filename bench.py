@@ -133,9 +133,14 @@ def _drop_leaked_blocks(spark) -> None:
     ~15 s in the same loop). Dropping them BETWEEN samples (outside the
     timed region) removes cross-sample state — the anti-gaming
     direction: every timed sample still computes its checkpoints from
-    parquet; they just stop inheriting the previous sample's garbage."""
+    parquet; they just stop inheriting the previous sample's garbage.
+
+    Invariant: no timed sample reads a block cached by another sample.
+    The unpersist blocks until every block is removed, so the removal
+    cannot overlap the next timed sample either; this call sits outside
+    the timed region."""
     for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist(False)
+        rdd.unpersist(True)
 
 
 def main() -> None:

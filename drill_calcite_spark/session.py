@@ -21,6 +21,25 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Entries in Spark's cache of compiled whole-stage/expression classes
+# (spark.sql.codegen.cache.maxEntries, Spark's default 100). Catalyst
+# generates Java source for every plan and compiles it with Janino, the
+# job Calcite's EnumerableInterpretable does per statement; the cache is
+# keyed by the source text, so a plan shape seen before compiles
+# nothing. One benchmark process compiles ~270 distinct classes for the
+# batch pipeline (11 registry queries among versioned-table DML) and
+# ~190 in 17 s of interactive templates, a number that keeps growing as
+# new literals arrive (each literal is inlined into the source). At 100
+# entries the batch working set evicts itself every cycle and
+# byte-identical code is recompiled, 12-14 compiles per operation; at
+# 2000 that falls to 0.2-0.3. A class averages 2.5-3.5 KB of bytecode,
+# and metaspace ends lower, not higher, because fewer classes get
+# loaded. A constant, not an option: it follows from the engine's plan
+# mix, like the settings below. It is a static conf, so it applies only
+# when get_spark creates the SparkContext; a session built elsewhere
+# keeps whatever cache size it started with.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def get_spark(
     app_name: str = "drill_calcite_spark",
@@ -45,6 +64,9 @@ def get_spark(
         # stats to use and only adds planning cost; AQE re-plans from *runtime*
         # stats, which is Calcite's VolcanoPlanner role here (SURVEY.md §4.2).
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_CPUS))
+        # each plan shape compiled once per process (see the constant)
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_ENTRIES))
         # --- semantics ---
         .config("spark.sql.session.timeZone", "UTC")
         # Calcite does not silently lose DECIMAL precision (RelDataTypeSystem);

@@ -1264,6 +1264,53 @@ def _rewrite_grouping_sets_dedup(text: str) -> str:
         pos = m.start() + len(repl)
 
 
+# words that end a GROUP BY list at its own paren depth
+_GROUP_BY_END = frozenset({
+    "having", "window", "qualify", "order", "limit", "offset", "fetch",
+    "union", "intersect", "except", "minus"})
+_INT_KEY = re.compile(r"[+-]?\s*\d+")
+_KEY_GROUP = re.compile(r"(?:rollup|cube|grouping\s+sets)?\s*\(", re.I)
+
+
+def _cast_int_keys(keys: str) -> str:
+    """Wrap every integer-literal key of a GROUP BY list, including the
+    keys inside ROLLUP, CUBE, GROUPING SETS and parenthesized groups, in
+    ``CAST(n AS INT)``. Spark's ordinal rule matches only a bare integer
+    literal, so the cast keeps Calcite's meaning (the constant) while
+    ``spark.sql.groupByOrdinal`` stays as the session has it."""
+    out = []
+    for item in _split_depth0(keys):
+        key = item.strip()
+        head = _KEY_GROUP.match(key)
+        if _INT_KEY.fullmatch(key) \
+                and abs(int(key.replace(" ", ""))) < 2 ** 31:
+            item = item.replace(key, f"CAST({key} AS INT)")
+        elif head:
+            scanned = _scan_call(key, head.end())
+            if scanned and scanned[1] == len(key):
+                item = item.replace(key, key[:head.end()]
+                                    + _cast_int_keys(scanned[0]) + ")")
+        out.append(item)
+    return ",".join(out)
+
+
+def _rewrite_group_ordinals(text: str) -> str:
+    """Calcite's default conformance reads ``GROUP BY 1`` as the constant
+    1 (SqlConformance.isGroupByOrdinal() = false), Spark as the first
+    select item. Rewrite every GROUP BY list so Spark sees no bare integer
+    key; ORDER BY ordinals stay ordinals in both (isSortByOrdinal())."""
+    mask = _string_mask(text)
+    for m in reversed([m for m in _GROUP_BY_KW.finditer(text)
+                       if not mask[m.start()]]):
+        items = _order_items(text, _string_mask(text), m.end(),
+                             _GROUP_BY_END)
+        if items:
+            end = items[-1][1]
+            text = (text[:m.end()] + _cast_int_keys(text[m.end():end])
+                    + text[end:])
+    return text
+
+
 # ------------------------------------------------------------- sequences
 _SEQ_REF = re.compile(
     r"\b(next|current)\s+value\s+for\s+"
@@ -1527,10 +1574,11 @@ def _rewrite_listagg(text: str) -> str:
     return "".join(out)
 
 
-def _order_items(text: str, mask: list[bool], start: int):
-    """Yield (item_start, item_end) spans of the ORDER BY list starting
-    at ``start`` (just past 'by'), ending at a terminator keyword, an
-    unbalanced ')', or end of text."""
+def _order_items(text: str, mask: list[bool], start: int,
+                 stop: "frozenset[str] | set[str]" = _ORDER_TERMINATORS):
+    """Yield (item_start, item_end) spans of the ORDER BY (or, with
+    ``stop``, GROUP BY) list starting at ``start`` (just past 'by'),
+    ending at a ``stop`` keyword, an unbalanced ')', or end of text."""
     i, n = start, len(text)
     depth = 0
     item_start = None
@@ -1551,7 +1599,7 @@ def _order_items(text: str, mask: list[bool], start: int):
             item_start = None
         elif depth == 0 and c.isalpha():
             w = _word_at(text, i)
-            if w in _ORDER_TERMINATORS:
+            if w in stop:
                 break
             if item_start is None:
                 item_start = i
@@ -2656,6 +2704,8 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
                 top_comma = True
         if not top_comma:
             text = re.sub(r"^\s*values\b", "select", text, flags=re.I)
+    if _GROUP_BY_KW.search(text):
+        text = _rewrite_group_ordinals(text)
     return _unshield_literals(text, _lits)
 
 
@@ -2665,11 +2715,10 @@ def calcite_sql(spark: SparkSession, text: str, *,
                 materializations=None) -> DataFrame:
     """The engine's SQL entry: Calcite-dialect text in, DataFrame out.
 
-    Runs with ``spark.sql.groupByOrdinal=false`` for the duration of the
-    parse: Calcite's default conformance does NOT read GROUP BY integers
-    as ordinals (SqlConformance.isGroupByOrdinal() = false — ``GROUP BY
-    1`` groups by the constant), while ORDER BY ordinals stay on
-    (isSortByOrdinal() = true), matching Spark's separate conf.
+    Calcite's default conformance does NOT read GROUP BY integers as
+    ordinals (``GROUP BY 1`` groups by the constant); ``rewrite`` spells
+    such keys so Spark's ordinal rule leaves them alone, and the session's
+    ``spark.sql.groupByOrdinal`` is never touched.
 
     When ``materializations`` (a plans.materialized.MaterializedViews
     registry) is provided, the statement is first offered to the
@@ -2700,10 +2749,8 @@ def calcite_sql(spark: SparkSession, text: str, *,
         if mask[m.start()] and (m.start() == 0 or not mask[m.start() - 1]):
             dq.add(m.group(1))
     case_collide = len({d.lower() for d in dq}) != len(dq)
-    prev = spark.conf.get("spark.sql.groupByOrdinal", "true")
-    prev_cs = spark.conf.get("spark.sql.caseSensitive", "false")
-    spark.conf.set("spark.sql.groupByOrdinal", "false")
     if case_collide:
+        prev_cs = spark.conf.get("spark.sql.caseSensitive", "false")
         spark.conf.set("spark.sql.caseSensitive", "true")
     try:
         stext = rewrite(text, schema_views=schema_views,
@@ -2716,7 +2763,6 @@ def calcite_sql(spark: SparkSession, text: str, *,
         if df is None:
             df = spark.sql(stext)
     finally:
-        spark.conf.set("spark.sql.groupByOrdinal", prev)
         if case_collide:
             spark.conf.set("spark.sql.caseSensitive", prev_cs)
     # NEXT VALUE FOR drains one value per produced row: pre-count the

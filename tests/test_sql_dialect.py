@@ -773,3 +773,71 @@ def test_date_range_pair_inequality_folds():
     q = "select * from o where extract(month from d) = 13 " \
         "and extract(year from d) = 1995"
     assert "extract(month from d) = 13" in rewrite(q)
+
+
+def test_group_by_integer_keys_are_constants():
+    """Calcite reads GROUP BY 1 as the constant, so every integer key,
+    including those in ROLLUP, CUBE and GROUPING SETS, is cast to stay out
+    of Spark's ordinal rule; ORDER BY ordinals are left as they are."""
+    out = rewrite("select count(*) from t where false group by 1 order by 1",
+                  nulls_high=False)
+    assert out == ("select count(*) from t where false "
+                   "group by CAST(1 AS INT) order by 1")
+    out = rewrite("select a from t group by rollup(1, a), cube((2, b)), "
+                  "grouping sets ((3), (a, -4), ()) having count(*) > 5",
+                  nulls_high=False)
+    assert out == ("select a from t group by rollup(CAST(1 AS INT), a), "
+                   "cube((CAST(2 AS INT), b)), grouping sets "
+                   "((CAST(3 AS INT)), (a, CAST(-4 AS INT)), ()) "
+                   "having count(*) > 5")
+    # nested GROUP BY lists, and keys that are not int literals
+    out = rewrite("select a from (select a from t group by 1) s "
+                  "group by a, 'x', 99999999999, a + 1 limit 2",
+                  nulls_high=False)
+    assert out == ("select a from (select a from t group by CAST(1 AS INT)) "
+                   "s group by a, 'x', 99999999999, a + 1 limit 2")
+
+
+def test_front_door_leaves_group_by_ordinal_to_other_clients(spark):
+    """One thread runs plain spark.sql with GROUP BY 1 (an ordinal under
+    the session's default) while another runs calcite_sql with GROUP BY 1
+    (a constant): neither sees the other's meaning, and the session's
+    conf is the same afterwards."""
+    import threading
+
+    from drill_calcite_spark.sql import calcite_sql
+
+    spark.range(12).selectExpr("id % 3 AS k").createOrReplaceTempView(
+        "ordinal_probe")
+    before = spark.conf.get("spark.sql.groupByOrdinal")
+    barrier, errors = threading.Barrier(2), []
+
+    def plain():
+        barrier.wait()
+        try:
+            for _ in range(40):  # analysis is eager: a constant key fails
+                spark.sql("SELECT k, count(*) AS n FROM ordinal_probe "
+                          "GROUP BY 1")
+        except Exception as e:  # noqa: BLE001  reported below
+            errors.append(e)
+
+    def front_door():
+        barrier.wait()
+        try:
+            for _ in range(40):
+                df = calcite_sql(spark, "SELECT count(*) AS n "
+                                 "FROM ordinal_probe GROUP BY 1")
+            assert [r.n for r in df.collect()] == [12]
+        except Exception as e:  # noqa: BLE001  reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=f) for f in (plain, front_door)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert sorted(r.n for r in spark.sql(
+        "SELECT k, count(*) AS n FROM ordinal_probe GROUP BY 1").collect()) \
+        == [4, 4, 4]
+    assert spark.conf.get("spark.sql.groupByOrdinal") == before
