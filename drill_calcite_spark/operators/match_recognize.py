@@ -47,6 +47,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
+from drill_calcite_spark import sqltext
+
 Predicate = Callable[[pd.DataFrame], "pd.Series"]
 Measure = Callable[[pd.DataFrame, dict[str, list[int]]], Any]
 
@@ -283,25 +285,6 @@ def _find_matches(symrows: list[set], alternatives: list[list[_Tok]],
 
 
 # ------------------------------------------------------------------ operator
-def _split_schema(schema: str) -> "list[str]":
-    """Split a DDL schema string at depth-0 commas (parameterized types
-    like decimal(7,2) contain commas of their own)."""
-    parts, depth, cur = [], 0, []
-    for ch in schema:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if "".join(cur).strip():
-        parts.append("".join(cur))
-    return parts
-
-
 def match_recognize(
     df: DataFrame,
     partition_by: Sequence[str],
@@ -378,7 +361,7 @@ def match_recognize(
     # output column order comes from the declared schema in ALL ROWS mode
     # (split at depth-0 commas only — ``decimal(7,2)`` carries its own)
     out_cols = (
-        [c.strip().split()[0] for c in _split_schema(output_schema)]
+        [c.split()[0] for c in sqltext.split(output_schema) if c.strip()]
         if rows_per_match == "all" else [k for k, _ in meas_items]
     )
 

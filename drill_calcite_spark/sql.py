@@ -29,9 +29,11 @@ own quidem expected outputs (tests/iq/):
    ``"scott".emp``; ``schema_views`` maps those onto registered view
    prefixes (Spark temp views are single-level).
 
-All rewrites are token-scans that respect string literals and quoted
-identifiers; none touch query STRUCTURE — Catalyst still owns parsing,
-validation, and planning (SURVEY §0 role map).
+All rewrites are token scans. Quoting and nesting are read through
+``sqltext`` alone, the front door's one lexer: string literals and quoted
+identifiers are opaque to every scan, as are brackets inside them. None
+touch query STRUCTURE — Catalyst still owns parsing, validation, and
+planning (SURVEY §0 role map).
 """
 
 from __future__ import annotations
@@ -40,6 +42,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from drill_calcite_spark import sqltext
+
 _WORD = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
 
 # keywords that end an ORDER BY list at paren depth 0
@@ -47,33 +51,8 @@ _ORDER_TERMINATORS = {
     "limit", "offset", "fetch", "rows", "range", "union", "intersect",
     "except", "minus", "window", "for",
 }
-
-
-def _string_mask(text: str) -> list[bool]:
-    """mask[i] is True when text[i] sits inside a '...' string literal or
-    a "..." quoted identifier (including the quotes)."""
-    mask = [False] * len(text)
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c in ("'", '"'):
-            quote = c
-            mask[i] = True
-            i += 1
-            while i < n:
-                mask[i] = True
-                if text[i] == quote:
-                    # doubled quote = escaped
-                    if i + 1 < n and text[i + 1] == quote:
-                        mask[i + 1] = True
-                        i += 2
-                        continue
-                    i += 1
-                    break
-                i += 1
-        else:
-            i += 1
-    return mask
+# what can end such a list: a closer it did not open, or a keyword
+_LIST_END = re.compile(r"[)\]]|[A-Za-z][A-Za-z_0-9]*")
 
 
 # Control char that cannot appear in any SQL the front door accepts —
@@ -85,33 +64,22 @@ def _shield_literals(text: str) -> "tuple[str, list[str]]":
     """Replace every single-quoted literal's CONTENT with an inert
     placeholder (``'\\x1f<k>\\x1f'``) so NO token rewrite can match
     inside it — keywords in literal text ('has pi here',
-    'floor(d to day)', '(table t2)') must survive the pipeline verbatim,
-    and unbalanced parens inside literals must not confuse the
-    depth-counting scans. ``_unshield_literals`` restores the bodies
-    after all rewrites ran. Double-quoted identifiers are NOT shielded:
-    ``_rewrite_dquote_idents`` needs their contents. Doubled ''
-    escapes stay inside the captured body and restore exactly."""
+    'floor(d to day)', '(table t2)') must survive the pipeline verbatim.
+    ``_unshield_literals`` restores the bodies after all rewrites ran.
+    Quoted identifiers are NOT shielded (``_rewrite_dquote_idents``
+    needs their contents), and a ' inside one opens no literal. Doubled
+    '' escapes stay inside the captured body and restore exactly. An
+    unterminated literal (an odd count of quotes) is left as it is."""
     lits: list[str] = []
     out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        if text[i] == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            if j < n:  # terminated literal
-                out.append(f"'{_LIT_SENTINEL}{len(lits)}{_LIT_SENTINEL}'")
-                lits.append(text[i + 1:j])
-                i = j + 1
-                continue
-        out.append(text[i])
-        i += 1
-    return "".join(out), lits
+    last = 0
+    for s, e in sqltext.quoted(text):
+        if text[s] == "'" and text.count("'", s, e) % 2 == 0:
+            out += [text[last:s],
+                    f"'{_LIT_SENTINEL}{len(lits)}{_LIT_SENTINEL}'"]
+            lits.append(text[s + 1:e - 1])
+            last = e
+    return "".join(out) + text[last:], lits
 
 
 def _unshield_literals(text: str, lits: "list[str]") -> str:
@@ -601,14 +569,8 @@ def _rewrite_floor_to(text: str) -> str:
         m = head.search(text, pos)
         if not m:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        i = sqltext.close(text, m.end() - 1)
+        if i is None:
             return text
         args = text[m.end():i - 1]
         tm = tail.search(args)
@@ -675,23 +637,10 @@ def _rewrite_tumble(text: str, lits: "list[str]") -> str:
         m = head.search(text, pos)
         if not m:
             return text
-        depth, i = 1, m.end()
-        args_split = []
-        last = m.end()
-        while i < len(text) and depth:
-            c = text[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    args_split.append(text[last:i])
-            elif c == "," and depth == 1:
-                args_split.append(text[last:i])
-                last = i + 1
-            i += 1
-        if depth:
+        i = sqltext.close(text, m.end() - 1)
+        if i is None:
             return text
+        args_split = sqltext.split(text[m.end():i - 1])
         if len(args_split) != 2:
             raise TumbleUnsupported(
                 f"{m.group(1).upper()} takes (datetime, interval); the "
@@ -727,30 +676,16 @@ def _rewrite_tumble(text: str, lits: "list[str]") -> str:
 
 def _gw_calls(text: str, head: "re.Pattern"):
     """Yield (match, end_index, args) for each ``head``-matched call,
-    splitting top-level comma-separated arguments (the same paren
-    scanner _rewrite_tumble uses)."""
+    split into its top-level comma-separated arguments."""
     pos = 0
     while True:
         m = head.search(text, pos)
         if not m:
             return
-        depth, i = 1, m.end()
-        args, last = [], m.end()
-        while i < len(text) and depth:
-            c = text[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    args.append(text[last:i])
-            elif c == "," and depth == 1:
-                args.append(text[last:i])
-                last = i + 1
-            i += 1
-        if depth:
+        i = sqltext.close(text, m.end() - 1)
+        if i is None:
             return
-        yield m, i, args
+        yield m, i, sqltext.split(text[m.end():i - 1])
         pos = i
 
 
@@ -894,21 +829,6 @@ def _rewrite_session(text: str, lits: "list[str]") -> str:
 # otherwise emit the duplicate rows Calcite suppresses).
 
 
-def _scan_call(text: str, start: int) -> "tuple[str, int] | None":
-    """(args, close_index) for the call whose '(' is at start-1... given
-    a match ending just past '('. Returns None on unbalanced text."""
-    depth, i = 1, start
-    while i < len(text) and depth:
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-        i += 1
-    if depth:
-        return None
-    return text[start:i - 1], i
-
-
 _IVL_PROD = re.compile(
     rf"([A-Za-z_][\w.]*|\"[\w$]+\")\s*\*\s*interval\s+(-)?\s*"
     rf"'{_LIT_SENTINEL}(\d+){_LIT_SENTINEL}'\s+"
@@ -1003,18 +923,11 @@ def _rewrite_period_ctor(text: str, lits: "list[str]") -> str:
         m = _PERIOD_CTOR.search(text)
         if not m:
             return text
-        depth, i, comma = 1, m.end(), None
-        while i < len(text) and depth:
-            c = text[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif c == "," and depth == 1:
-                comma = i
-            i += 1
-        if depth or comma is None:
+        i = sqltext.close(text, m.end() - 1)
+        commas = [] if i is None else sqltext.top(text[m.end():i - 1], ",")
+        if not commas:
             return text
+        comma = m.end() + commas[-1].start()
 
         def comp(a: str) -> str:
             im = _PERIOD_IVL.match(a)
@@ -1053,11 +966,10 @@ def _rewrite_json_exists(text: str, lits: "list[str]") -> str:
         m = _JSON_EXISTS.search(text, pos)
         if not m:
             return text
-        scanned = _scan_call(text, m.end())
-        if scanned is None:
+        close = sqltext.close(text, m.end() - 1)
+        if close is None:
             return text
-        args, close = scanned
-        parts = [p.strip() for p in _split_depth0(args)]
+        parts = [p.strip() for p in sqltext.split(text[m.end():close - 1])]
         if len(parts) != 2:
             pos = m.end()
             continue
@@ -1086,11 +998,10 @@ def _rewrite_grouping_funcs(text: str) -> str:
         m = pat.search(text, pos)
         if not m:
             return text
-        scanned = _scan_call(text, m.end())
-        if scanned is None:
+        close = sqltext.close(text, m.end() - 1)
+        if close is None:
             return text
-        args, close = scanned
-        items = [a.strip() for a in _split_depth0(args)]
+        items = [a.strip() for a in sqltext.split(text[m.end():close - 1])]
         if m.group(1).lower() == "grouping" and len(items) == 1:
             pos = m.end()  # native single-column grouping
             continue
@@ -1101,22 +1012,6 @@ def _rewrite_grouping_funcs(text: str) -> str:
             for i, a in enumerate(items)) + ")"
         text = text[:m.start()] + repl + text[close:]
         pos = m.start() + len(repl)
-
-
-def _depth0_positions(text: str, pattern: "re.Pattern[str]",
-                      mask: "list[bool] | None" = None):
-    """Matches of ``pattern`` at paren depth 0 outside string literals."""
-    mask = _string_mask(text) if mask is None else mask
-    depths, d = [], 0
-    for i, ch in enumerate(text):
-        if not mask[i]:
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-        depths.append(d)
-    return [m for m in pattern.finditer(text)
-            if not mask[m.start()] and depths[m.start()] == 0]
 
 
 _HAVING_KW = re.compile(r"\bhaving\b", re.I)
@@ -1136,24 +1031,24 @@ def _rewrite_having_grouping(text: str) -> str:
     grouping() against the GROUP BY natively. Requires every select
     item to be aliased or a bare column (the outer SELECT must be able
     to re-project by name); falls through verbatim otherwise."""
-    having = next(iter(_depth0_positions(text, _HAVING_KW)), None)
+    having = next(iter(sqltext.top(text, _HAVING_KW)), None)
     if having is None:
         return text
-    tail = next((m for m in _depth0_positions(text, _TAIL_KW)
+    tail = next((m for m in sqltext.top(text, _TAIL_KW)
                  if m.start() > having.end()), None)
     cond_end = tail.start() if tail else len(text)
     cond = text[having.end():cond_end].strip()
     if not re.search(r"\bgrouping(_id)?\s*\(", cond, re.I):
         return text
-    sel = next(iter(_depth0_positions(text, _SELECT_KW)), None)
+    sel = next(iter(sqltext.top(text, _SELECT_KW)), None)
     if sel is None or sel.group(1):  # DISTINCT: extra column changes it
         return text
-    frm = next((m for m in _depth0_positions(text, _FROM_KW)
+    frm = next((m for m in sqltext.top(text, _FROM_KW)
                 if m.start() > sel.end()), None)
     if frm is None or frm.start() > having.start():
         return text
     outs = []
-    for it in _split_depth0(text[sel.end():frm.start()]):
+    for it in sqltext.split(text[sel.end():frm.start()]):
         it = it.strip()
         ma = re.search(r"\s+as\s+(\w+)\s*$", it, re.I)
         if ma:
@@ -1186,30 +1081,30 @@ def _rewrite_orderby_grouping(text: str) -> str:
     (``__ob{i}``), order outside, and re-project the original output
     columns — the sort is a post-aggregate operator, so the transform
     is exact. Same aliasable-select-list contract as the HAVING lift."""
-    ob = next(iter(_depth0_positions(text, _ORDER_BY_KW)), None)
+    ob = next(iter(sqltext.top(text, _ORDER_BY_KW)), None)
     if ob is None:
         return text
-    lim = next((m for m in _depth0_positions(
+    lim = next((m for m in sqltext.top(
         text, re.compile(r"\blimit\b|\boffset\b", re.I))
         if m.start() > ob.end()), None)
     items_end = lim.start() if lim else len(text)
-    items = _split_depth0(text[ob.end():items_end])
+    items = sqltext.split(text[ob.end():items_end])
     if not any(re.search(r"\bgrouping(_id)?\s*\(", it, re.I)
                for it in items):
         return text
-    sel = next(iter(_depth0_positions(text, _SELECT_KW)), None)
+    sel = next(iter(sqltext.top(text, _SELECT_KW)), None)
     if sel is None or sel.group(1):
         return text
-    gb = next((m for m in _depth0_positions(text, _GROUP_BY_KW)
+    gb = next((m for m in sqltext.top(text, _GROUP_BY_KW)
                if m.start() > sel.end() and m.start() < ob.start()), None)
     if gb is None:
         return text
-    frm = next((m for m in _depth0_positions(text, _FROM_KW)
+    frm = next((m for m in sqltext.top(text, _FROM_KW)
                 if m.start() > sel.end()), None)
     if frm is None or frm.start() > gb.start():
         return text
     outs = []
-    for it in _split_depth0(text[sel.end():frm.start()]):
+    for it in sqltext.split(text[sel.end():frm.start()]):
         it = it.strip()
         ma = re.search(r"\s+as\s+(\w+)\s*$", it, re.I)
         if ma:
@@ -1248,12 +1143,11 @@ def _rewrite_grouping_sets_dedup(text: str) -> str:
         m = pat.search(text, pos)
         if not m:
             return text
-        scanned = _scan_call(text, m.end())
-        if scanned is None:
+        close = sqltext.close(text, m.end() - 1)
+        if close is None:
             return text
-        args, close = scanned
         seen, kept = set(), []
-        for item in _split_depth0(args):
+        for item in sqltext.split(text[m.end():close - 1]):
             key = re.sub(r"\s+", "", item).lower()
             if key in seen:
                 continue
@@ -1279,17 +1173,15 @@ def _cast_int_keys(keys: str) -> str:
     literal, so the cast keeps Calcite's meaning (the constant) while
     ``spark.sql.groupByOrdinal`` stays as the session has it."""
     out = []
-    for item in _split_depth0(keys):
+    for item in sqltext.split(keys):
         key = item.strip()
         head = _KEY_GROUP.match(key)
         if _INT_KEY.fullmatch(key) \
                 and abs(int(key.replace(" ", ""))) < 2 ** 31:
             item = item.replace(key, f"CAST({key} AS INT)")
-        elif head:
-            scanned = _scan_call(key, head.end())
-            if scanned and scanned[1] == len(key):
-                item = item.replace(key, key[:head.end()]
-                                    + _cast_int_keys(scanned[0]) + ")")
+        elif head and sqltext.close(key, head.end() - 1) == len(key):
+            item = item.replace(key, key[:head.end()]
+                                + _cast_int_keys(key[head.end():-1]) + ")")
         out.append(item)
     return ",".join(out)
 
@@ -1299,11 +1191,10 @@ def _rewrite_group_ordinals(text: str) -> str:
     1 (SqlConformance.isGroupByOrdinal() = false), Spark as the first
     select item. Rewrite every GROUP BY list so Spark sees no bare integer
     key; ORDER BY ordinals stay ordinals in both (isSortByOrdinal())."""
-    mask = _string_mask(text)
+    mask = sqltext.mask(text)
     for m in reversed([m for m in _GROUP_BY_KW.finditer(text)
                        if not mask[m.start()]]):
-        items = _order_items(text, _string_mask(text), m.end(),
-                             _GROUP_BY_END)
+        items = _order_items(text, m.end(), _GROUP_BY_END)
         if items:
             end = items[-1][1]
             text = (text[:m.end()] + _cast_int_keys(text[m.end():end])
@@ -1398,22 +1289,6 @@ def _sql_jv(val_expr: str) -> str:
             f"substring(_j, 6, length(_j) - 6))[0]")
 
 
-def _split_top_level(s: str, sep: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        if ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    parts.append("".join(cur))
-    return parts
-
-
 _NULL_CLAUSE = re.compile(r"\s+(null|absent)\s+on\s+null\s*$", re.I)
 _FORMAT_JSON = re.compile(r"\s+format\s+json\s*$", re.I)
 _ORDER_CLAUSE = re.compile(
@@ -1432,22 +1307,16 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
 
     def one(m: "re.Match[str]") -> "str | None":
         fn = m.group(1).lower()
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = sqltext.close(text, m.end() - 1)
+        if close is None:
             return None
-        args, close = text[m.end():i - 1], i
+        args = text[m.end():close - 1]
         if _JSON_CALL.search(args):
             return None  # not innermost — recurse later
         if fn == "json_object":
             pairs = []
-            for part in _split_top_level(args, ","):
-                k_txt, v_txt = _split_top_level(part, ":")
+            for part in sqltext.split(args):
+                k_txt, v_txt = sqltext.split(part, ":")
                 lm = _LIT_REF.match(k_txt)
                 if not lm:
                     raise ValueError(
@@ -1471,7 +1340,7 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
             absent = bool(nc and nc.group(1).lower() == "absent")
             if nc:
                 a = a[:nc.start()]
-            k_txt, v_txt = _split_top_level(a, ":")
+            k_txt, v_txt = sqltext.split(a, ":")
             k_txt, v_txt = k_txt.strip(), v_txt.strip()
             guard = (f"({k_txt}) IS NOT NULL AND ({v_txt}) IS NOT NULL"
                      if absent else f"({k_txt}) IS NOT NULL")
@@ -1547,26 +1416,15 @@ def _jq(key: str) -> str:
 def _rewrite_listagg(text: str) -> str:
     """listagg(expr) → listagg(expr, ',') when the call has exactly one
     top-level argument (Calcite's default comma separator)."""
-    mask = _string_mask(text)
+    mask = sqltext.mask(text)
     out, consumed = [], 0
     for m in re.finditer(r"\blistagg\s*\(", text, re.I):
         if mask[m.start()]:
             continue
-        # scan to the matching close paren, watching top-level commas
-        depth, i, has_comma = 1, m.end(), False
-        while i < len(text) and depth:
-            if not mask[i]:
-                c = text[i]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                elif c == "," and depth == 1:
-                    has_comma = True
-            i += 1
-        if depth or has_comma:
+        end = sqltext.close(text, m.end() - 1)
+        if end is None or sqltext.top(text[m.end():end - 1], ","):
             continue
-        close = i - 1
+        close = end - 1
         out.append(text[consumed:close])
         out.append(", ','")
         consumed = close
@@ -1574,54 +1432,33 @@ def _rewrite_listagg(text: str) -> str:
     return "".join(out)
 
 
-def _order_items(text: str, mask: list[bool], start: int,
+def _order_items(text: str, start: int,
                  stop: "frozenset[str] | set[str]" = _ORDER_TERMINATORS):
-    """Yield (item_start, item_end) spans of the ORDER BY (or, with
-    ``stop``, GROUP BY) list starting at ``start`` (just past 'by'),
-    ending at a ``stop`` keyword, an unbalanced ')', or end of text."""
-    i, n = start, len(text)
-    depth = 0
-    item_start = None
-    items = []
-    while i < n:
-        if mask[i]:
-            i += 1
-            continue
-        c = text[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            if depth == 0:
-                break
-            depth -= 1
-        elif c == "," and depth == 0:
-            items.append((item_start, i))
-            item_start = None
-        elif depth == 0 and c.isalpha():
-            w = _word_at(text, i)
-            if w in stop:
-                break
-            if item_start is None:
-                item_start = i
-            i += len(w)
-            continue
-        elif item_start is None and not c.isspace():
-            item_start = i
-        i += 1
-    if item_start is not None:
-        items.append((item_start, i))
-    return [(a, b) for a, b in items if a is not None]
+    """(item_start, item_end) spans of the ORDER BY (or, with ``stop``,
+    GROUP BY) list starting at ``start`` (just past 'by'), ending at a
+    ``stop`` keyword, an unbalanced ')', or end of text."""
+    tail = text[start:]
+    end = next((m.start() for m in sqltext.top(tail, _LIST_END)
+                if m.group() in ")]" or m.group().lower() in stop),
+               len(tail))
+    items, pos = [], start
+    for part in sqltext.split(tail[:end]):
+        if part.strip():
+            items.append((pos + len(part) - len(part.lstrip()),
+                          pos + len(part)))
+        pos += len(part) + 1
+    return items
 
 
 def _rewrite_nulls_high(text: str) -> str:
     """Append NULLS LAST (ASC) / NULLS FIRST (DESC) to every ORDER BY
     item lacking an explicit NULLS clause — Calcite's HIGH default."""
-    mask = _string_mask(text)
+    mask = sqltext.mask(text)
     edits: list[tuple[int, str]] = []
     for m in re.finditer(r"\border\s+by\b", text, re.I):
         if mask[m.start()]:
             continue
-        for a, b in _order_items(text, mask, m.end()):
+        for a, b in _order_items(text, m.end()):
             item = text[a:b]
             words = [w.lower() for w in _WORD.findall(item)]
             if "nulls" in words:
@@ -1681,59 +1518,27 @@ def _rewrite_schema_refs(text: str, schema: str, prefix: str) -> str:
 def _rewrite_dquote_idents(text: str) -> str:
     """Calcite lexes double-quoted tokens as IDENTIFIERS (Parser.jj
     DQID); Spark wants backticks. '...' string literals are untouched."""
-    out, i, n = [], 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(text[i:j + 1])
-            i = j + 1
-        elif c == '"':
-            j = i + 1
-            body = []
-            while j < n:
-                if text[j] == '"':
-                    if j + 1 < n and text[j + 1] == '"':
-                        body.append('"')
-                        j += 2
-                        continue
-                    break
-                body.append(text[j])
-                j += 1
-            out.append("`" + "".join(body) + "`")
-            i = j + 1
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
+    out, last = [], 0
+    for s, e in sqltext.quoted(text):
+        if text[s] == '"':
+            body = text[s + 1:e - 1 if e - s > 1 and text[e - 1] == '"' else e]
+            out += [text[last:s], "`", body.replace('""', '"'), "`"]
+            last = e
+    return "".join(out) + text[last:]
 
 
 def _wrap_call(text: str, name: str, new_open: str, extra_close: str) -> str:
     """Replace ``name(args)`` with ``new_open args extra_close )`` keeping
     args balanced (e.g. fusion(x) → flatten(collect_list(x)))."""
-    mask = _string_mask(text)
+    mask = sqltext.mask(text)
     out, consumed = [], 0
     for m in re.finditer(rf"\b{name}\s*\(", text, re.I):
         if mask[m.start()]:
             continue
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if not mask[i]:
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-            i += 1
-        if depth:
+        end = sqltext.close(text, m.end() - 1)
+        if end is None:
             continue
-        close = i - 1
+        close = end - 1
         out.append(text[consumed:m.start()])
         out.append(new_open)
         out.append(text[m.end():close])
@@ -1793,16 +1598,8 @@ def _quant_lhs_span(text: str, op_start: int) -> "tuple[int, int] | None":
     if j < 0:
         return None
     if text[j] == ")":
-        depth, k = 0, j
-        while k >= 0:
-            if text[k] == ")":
-                depth += 1
-            elif text[k] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
-            k -= 1
-        if depth != 0:
+        k = sqltext.opening(text, j)
+        if k is None:
             return None
         # include a directly-attached function name, if any
         i = k - 1
@@ -1820,7 +1617,8 @@ def _quant_lhs_span(text: str, op_start: int) -> "tuple[int, int] | None":
     return (start, j + 1)
 
 
-_PROJ_IN_PAT = re.compile(r"\b(not\s+)?in\s*\(\s*(?=select\b|with\b)", re.I)
+_PROJ_IN_PAT = re.compile(
+    r"\b(not\s+)?in\s*(\()\s*(?=select\b|with\b)", re.I)
 _CTX_KW = re.compile(r"\b(select|where|having|qualify|on|when)\b", re.I)
 
 # The alias group must NOT consume a following keyword: `from t join u`
@@ -1853,7 +1651,7 @@ def _subquery_has_outer_refs(sub: str) -> bool:
     to Spark. Bare-column correlation is not detectable without a
     catalog and stays out of scope (as in Calcite's own
     RexSubQuery-decorrelation preconditions)."""
-    mask = _string_mask(sub)
+    mask = sqltext.mask(sub)
     defined: "set[str]" = set()
     for m in _FROM_ITEM.finditer(sub):
         if mask[m.start()]:
@@ -1897,7 +1695,7 @@ def _rewrite_projected_in_subquery(text: str) -> str:
     anything else → filter context, leave."""
     pos = 0
     while True:
-        mask = _string_mask(text)
+        mask = sqltext.mask(text)
         m = None
         for cand in _PROJ_IN_PAT.finditer(text, pos):
             if not mask[cand.start()]:
@@ -1911,14 +1709,9 @@ def _rewrite_projected_in_subquery(text: str) -> str:
             continue
         lhs = text[span[0]:span[1]]
         neg = bool(m.group(1))
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if not mask[i]:
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-            i += 1
+        i = sqltext.close(text, m.start(2))
+        if i is None:
+            return text
         sub = text[m.end():i - 1]
         # rewrite in SELECT (value) context, and in ANY context when the
         # predicate's UNKNOWN-ness is OBSERVED by a following IS [NOT]
@@ -1972,29 +1765,24 @@ def _rewrite_row_in_nulllist(text: str) -> str:
     pat = re.compile(r"\b(not\s+)?in\s*\(", re.I)
     pos = 0
     while True:
-        mask = _string_mask(text)
+        mask = sqltext.mask(text)
         m = next((c for c in pat.finditer(text, pos)
                   if not mask[c.start()]), None)
         if m is None:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if not mask[i]:
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-            i += 1
+        i = sqltext.close(text, m.end() - 1)
+        if i is None:
+            return text
         body = text[m.end():i - 1]
         if re.match(r"\s*(select|with|values)\b", body, re.I):
             pos = m.end()
             continue
-        items = [it.strip() for it in _split_depth0(body)]
+        items = [it.strip() for it in sqltext.split(body)]
         if not items or not all(it.startswith("(") and it.endswith(")")
                                 for it in items):
             pos = m.end()
             continue
-        tuples = [[v.strip() for v in _split_depth0(it[1:-1])]
+        tuples = [[v.strip() for v in sqltext.split(it[1:-1])]
                   for it in items]
         if not any(re.fullmatch(r"null", v, re.I)
                    for tup in tuples for v in tup):
@@ -2004,20 +1792,8 @@ def _rewrite_row_in_nulllist(text: str) -> str:
         j = m.start() - 1
         while j >= 0 and text[j].isspace():
             j -= 1
-        if j < 0 or text[j] != ")":
-            pos = m.end()
-            continue
-        d2, k = 0, j
-        while k >= 0:
-            if not mask[k]:
-                if text[k] == ")":
-                    d2 += 1
-                elif text[k] == "(":
-                    d2 -= 1
-                    if d2 == 0:
-                        break
-            k -= 1
-        if k < 0:
+        k = sqltext.opening(text, j) if j >= 0 else None
+        if k is None:
             pos = m.end()
             continue
         # the paren group must be a ROW CONSTRUCTOR, not a call's
@@ -2036,7 +1812,7 @@ def _rewrite_row_in_nulllist(text: str) -> str:
                                  "by", "row"):
             pos = m.end()
             continue
-        lhs = [v.strip() for v in _split_depth0(text[k + 1:j])]
+        lhs = [v.strip() for v in sqltext.split(text[k + 1:j])]
         if len(lhs) < 2 or any(len(t) != len(lhs) for t in tuples):
             pos = m.end()
             continue
@@ -2055,7 +1831,7 @@ def _rewrite_quantified(text: str) -> str:
     NOT IN, ordered ops → Calcite's min/max + count-guard expansion
     (rules/SubQueryRemoveRule.java), preserving three-valued logic.
     The quidem some.iq corpus (NULL-element edge cases) is the check."""
-    mask = _string_mask(text)
+    mask = sqltext.mask(text)
     pos = 0
     while True:
         m = _QUANT_PAT.search(text, pos)
@@ -2070,18 +1846,14 @@ def _rewrite_quantified(text: str) -> str:
             continue
         lhs = text[span[0]:span[1]]
         op, quant = m.group(1), m.group(2).lower()
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
+        i = sqltext.close(text, m.end() - 1)
+        if i is None:
+            return text
         sub = text[m.end():i - 1]
         if not re.match(r"\s*(select|with|values)\b", sub, re.I):
             # quantified over a VALUE LIST: x > ALL (a, b) — lift the
             # list into a VALUES subquery and reuse the same expansion
-            items = ", ".join(f"({v.strip()})" for v in sub.split(","))
+            items = ", ".join(f"({v.strip()})" for v in sqltext.split(sub))
             sub = f"SELECT __v FROM (VALUES {items}) AS __t(__v)"
         quant_kind = "some" if quant in ("any", "some") else "all"
         if op == "=" and quant_kind == "some":
@@ -2103,7 +1875,7 @@ def _rewrite_quantified(text: str) -> str:
                 "three-valued-logic-preserving rewrite here; use the "
                 "builder API's quantified forms")
         text = text[:span[0]] + repl + text[i:]
-        mask = _string_mask(text)
+        mask = sqltext.mask(text)
         pos = 0
 
 
@@ -2115,19 +1887,14 @@ def _rewrite_initcap(text: str) -> str:
     previous-char lookback — pure column algebra, no UDF."""
     pat = re.compile(r"\binitcap\s*\(", re.I)
     while True:
-        mask = _string_mask(text)
+        mask = sqltext.mask(text)
         m = next((mm for mm in pat.finditer(text)
                   if not mask[mm.start()]), None)
         if m is None:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if not mask[i]:
-                if text[i] == "(":
-                    depth += 1
-                elif text[i] == ")":
-                    depth -= 1
-            i += 1
+        i = sqltext.close(text, m.end() - 1)
+        if i is None:
+            return text
         arg = text[m.end():i - 1]
         repl = (
             f"array_join(transform(split({arg}, ''), (__c, __i) -> "
@@ -2142,36 +1909,21 @@ def _rewrite_multiarg_count(text: str) -> str:
     argument is non-null (SqlStdOperatorTable COUNT is multi-arg;
     agg.iq's "composite count" cases). Spark's COUNT takes one argument
     unless DISTINCT — rewrite to count(CASE WHEN ... THEN 1 END)."""
-    mask = _string_mask(text)
+    mask = sqltext.mask(text)
     out, consumed = [], 0
     for m in re.finditer(r"\bcount\s*\(", text, re.I):
         if mask[m.start()]:
             continue
-        depth, i = 1, m.end()
-        commas = []
-        while i < len(text) and depth:
-            if not mask[i]:
-                c = text[i]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                elif c == "," and depth == 1:
-                    commas.append(i)
-            i += 1
-        if depth or not commas:
+        end = sqltext.close(text, m.end() - 1)
+        if end is None:
             continue
-        close = i - 1
-        body = text[m.end():close]
-        if re.match(r"\s*distinct\b", body, re.I):
+        args = [a.strip() for a in sqltext.split(text[m.end():end - 1])]
+        if len(args) < 2 or re.match(r"distinct\b", args[0], re.I):
             continue  # count(DISTINCT a, b) is native
-        bounds = [m.end()] + [c + 1 for c in commas] + [close + 1]
-        args = [text[bounds[k]:bounds[k + 1] - 1].strip()
-                for k in range(len(bounds) - 1)]
         cond = " AND ".join(f"({a}) IS NOT NULL" for a in args)
         out.append(text[consumed:m.start()])
         out.append(f"count(CASE WHEN {cond} THEN 1 END)")
-        consumed = close + 1
+        consumed = end
     out.append(text[consumed:])
     return "".join(out)
 
@@ -2183,14 +1935,8 @@ def _rewrite_array_literals(text: str) -> str:
         m = pat.search(text)
         if not m:
             return text
-        depth, i = 1, m.end()
-        while i < len(text) and depth:
-            if text[i] == "[":
-                depth += 1
-            elif text[i] == "]":
-                depth -= 1
-            i += 1
-        if depth:
+        i = sqltext.close(text, m.end() - 1)
+        if i is None:
             return text  # unbalanced — leave untouched
         body = text[m.end():i - 1]
         text = text[:m.start()] + "array(" + body + ")" + text[i:]
@@ -2207,15 +1953,7 @@ def _operand_back(text: str, end: int) -> int:
     while i > 0 and text[i - 1].isspace():
         i -= 1
     if i > 0 and text[i - 1] == ")":
-        depth = 0
-        while i > 0:
-            i -= 1
-            if text[i] == ")":
-                depth += 1
-            elif text[i] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
+        i = sqltext.opening(text, i - 1) or 0
         # include an attached function name
         j = i
         while j > 0 and (text[j - 1].isalnum() or text[j - 1] in "_."):
@@ -2238,15 +1976,7 @@ def _operand_fwd(text: str, start: int) -> int:
     while j < len(text) and text[j].isspace():
         j += 1
     if j < len(text) and text[j] == "(":
-        depth = 0
-        while j < len(text):
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    return j + 1
-            j += 1
+        return sqltext.close(text, j) or len(text)
     return j
 
 
@@ -2293,24 +2023,6 @@ _VALUES_ALIAS = re.compile(
 _CALL_IN_CELL = re.compile(r"[A-Za-z_]\w*\s*\(")
 
 
-def _split_depth0(s: str) -> "list[str]":
-    """Split on commas at paren depth 0, respecting string literals."""
-    mask = _string_mask(s)
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if mask[i]:
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return parts
-
-
 def _rewrite_values_exprs(text: str) -> str:
     """Calcite evaluates arbitrary expressions inside a VALUES inline
     table; Spark's inline tables accept only foldable literals
@@ -2319,31 +2031,21 @@ def _rewrite_values_exprs(text: str) -> str:
     rejected). Rewrite ``(VALUES (e1, e2), …) AS t(c1, c2)`` whose rows
     contain function calls into the equivalent
     ``(SELECT e1 AS c1, e2 AS c2 UNION ALL …) AS t``."""
-    mask = _string_mask(text)
+    mask = sqltext.mask(text)
     matches = [m for m in _VALUES_OPEN.finditer(text) if not mask[m.start()]]
     for m in reversed(matches):
-        depth, end = 0, None
-        for j in range(m.start(), len(text)):
-            if mask[j]:
-                continue
-            if text[j] == "(":
-                depth += 1
-            elif text[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    end = j
-                    break
+        end = sqltext.close(text, m.start())
         if end is None:
             continue
-        alias = _VALUES_ALIAS.match(text, end + 1)
+        alias = _VALUES_ALIAS.match(text, end)
         if not alias:
             continue
-        rows = [r.strip() for r in _split_depth0(text[m.end():end])]
+        rows = [r.strip() for r in sqltext.split(text[m.end():end - 1])]
         cols = [c.strip() for c in alias.group(2).split(",")]
         cells_by_row = []
         for r in rows:
             body = r[1:-1] if r.startswith("(") and r.endswith(")") else r
-            cells_by_row.append([c.strip() for c in _split_depth0(body)])
+            cells_by_row.append([c.strip() for c in sqltext.split(body)])
         if not any(_CALL_IN_CELL.search(c)
                    for row in cells_by_row for c in row):
             continue  # plain literal rows: Spark handles them natively
@@ -2374,7 +2076,7 @@ def _rewrite_unordered_windows(text: str) -> str:
     deptno)`` (:703) — i.e. every row ranks behind all its peers;
     ``count(*)`` over the same partition reproduces that exactly (and
     needs no ORDER BY)."""
-    mask = _string_mask(text)
+    mask = sqltext.mask(text)
     out, consumed = [], 0
     for m in _OVER_RE.finditer(text):
         if mask[m.start()] or m.start() < consumed:
@@ -2384,14 +2086,9 @@ def _rewrite_unordered_windows(text: str) -> str:
         fn = re.search(r"([a-z_]+)\s*\(([^()]*)\)$", head, re.I)
         if not fn or fn.group(1).lower() not in _RANKING_FNS:
             continue
-        depth, j = 1, m.end()
-        while j < len(text) and depth:
-            if not mask[j]:
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-            j += 1
+        j = sqltext.close(text, m.end() - 1)
+        if j is None:
+            continue
         spec = text[m.end():j - 1]
         if re.search(r"\border\s+by\b", spec, re.I):
             continue
@@ -2415,22 +2112,15 @@ def _rewrite_unary_minmax(text: str) -> str:
     single-argument form."""
     pat = re.compile(r"\b(greatest|least)\s*\(", re.I)
     while True:
-        mask = _string_mask(text)
+        mask = sqltext.mask(text)
         m = next((mm for mm in pat.finditer(text) if not mask[mm.start()]),
                  None)
         if m is None:
             return text
-        depth, j, comma = 1, m.end(), False
-        while j < len(text) and depth:
-            if not mask[j]:
-                if text[j] == "(":
-                    depth += 1
-                elif text[j] == ")":
-                    depth -= 1
-                elif text[j] == "," and depth == 1:
-                    comma = True
-            j += 1
-        if comma:
+        j = sqltext.close(text, m.end() - 1)
+        if j is None:
+            return text
+        if sqltext.top(text[m.end():j - 1], ","):
             # ≥ 2 args: leave it (rescan from the end of this call)
             head, tail = text[:j], text[j:]
             tail = _rewrite_unary_minmax(tail)
@@ -2567,28 +2257,17 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
         # the STATEMENT-level ORDER BY is the depth-0 occurrence outside
         # string literals — `order by` inside an OVER clause or a
         # subquery sits at depth ≥ 1 and must not be touched
-        mask = _string_mask(text)
-        depths, d = [], 0
-        for i, ch in enumerate(text):
-            if not mask[i]:
-                if ch == "(":
-                    d += 1
-                elif ch == ")":
-                    d -= 1
-            depths.append(d)
-        obs = [m for m in re.finditer(r"\border\s+by\s+", text, re.I)
-               if not mask[m.start()] and depths[m.start()] == 0
-               and m.start() > sd.end()]
+        obs = [m for m in sqltext.top(text, r"\border\s+by\s+")
+               if m.start() > sd.end()]
         if obs:
             ob = obs[-1]
             # aliases live in the SELECT list: between DISTINCT and the
             # statement-level FROM
-            fr = next((m for m in re.finditer(r"\bfrom\b", text, re.I)
-                       if not mask[m.start()] and depths[m.start()] == 0
-                       and m.start() > sd.end()), None)
+            fr = next((m for m in sqltext.top(text, _FROM_KW)
+                       if m.start() > sd.end()), None)
             sel = text[sd.end():fr.start() if fr else ob.start()]
             parts = []
-            for item in _split_depth0(text[ob.end():]):
+            for item in sqltext.split(text[ob.end():]):
                 m_dir = re.match(r"^(.*?)(\s+(?:asc|desc))?\s*$", item,
                                  re.I | re.S)
                 expr = m_dir.group(1).strip()
@@ -2694,15 +2373,7 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
     # as the lambda-based multiset rewrites — a single-row VALUES of one
     # expression is SELECT-without-FROM
     if re.match(r"\s*values\b", text, re.I) and "->" in text:
-        depth, top_comma = 0, False
-        for ch in text:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                top_comma = True
-        if not top_comma:
+        if not sqltext.top(text, ","):
             text = re.sub(r"^\s*values\b", "select", text, flags=re.I)
     if _GROUP_BY_KW.search(text):
         text = _rewrite_group_ordinals(text)
@@ -2743,11 +2414,8 @@ def calcite_sql(spark: SparkSession, text: str, *,
     # resolve THIS statement under spark.sql.caseSensitive=true — the
     # rewrite turns the quotes into backticks, which then resolve
     # byte-exactly like Calcite's DQIDs.
-    mask = _string_mask(text)
-    dq = set()
-    for m in re.finditer(r'"((?:[^"]|"")+)"', text):
-        if mask[m.start()] and (m.start() == 0 or not mask[m.start() - 1]):
-            dq.add(m.group(1))
+    dq = {text[s + 1:e - 1] for s, e in sqltext.quoted(text)
+          if text[s] == '"'}
     case_collide = len({d.lower() for d in dq}) != len(dq)
     if case_collide:
         prev_cs = spark.conf.get("spark.sql.caseSensitive", "false")

@@ -46,6 +46,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
+from drill_calcite_spark import sqltext
+
 
 class MatchRecognizeUnsupported(Exception):
     pass
@@ -54,21 +56,15 @@ class MatchRecognizeUnsupported(Exception):
 _MR_HEAD = re.compile(r"\bmatch_recognize\s*\(", re.I)
 
 
+def _mr_head(text: str) -> "re.Match[str] | None":
+    """The first MATCH_RECOGNIZE keyword outside quotes."""
+    mask = sqltext.mask(text)
+    return next((m for m in _MR_HEAD.finditer(text) if not mask[m.start()]),
+                None)
+
+
 def has_match_recognize(text: str) -> bool:
-    return bool(_MR_HEAD.search(text))
-
-
-def _balanced_span(text: str, open_at: int) -> int:
-    """End index (exclusive) of the paren group opening at ``open_at``."""
-    depth = 0
-    for i in range(open_at, len(text)):
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    raise MatchRecognizeUnsupported("unbalanced parens in MATCH_RECOGNIZE")
+    return _mr_head(text) is not None
 
 
 _CLAUSE = re.compile(
@@ -80,46 +76,10 @@ _CLAUSE = re.compile(
 def _split_clauses(body: str) -> "list[tuple[str, str]]":
     """Split the MR body into (clause_keyword, clause_text) pairs at
     paren depth 0."""
-    marks = []
-    depth = 0
-    i = 0
-    while i < len(body):
-        c = body[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _CLAUSE.match(body, i)
-            if m:
-                marks.append((m.start(), m.end(),
-                              re.sub(r"\s+", " ", m.group(1).lower())))
-                i = m.end()
-                continue
-        i += 1
-    out = []
-    for k, (s, e, kw) in enumerate(marks):
-        nxt = marks[k + 1][0] if k + 1 < len(marks) else len(body)
-        out.append((kw, body[e:nxt].strip()))
-    return out
-
-
-def _split_top(text: str, sep: str = ",") -> "list[str]":
-    parts, depth, cur = [], 0, []
-    for c in text:
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if c == sep and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
+    marks = sqltext.top(body, _CLAUSE)
+    return [(re.sub(r"\s+", " ", m.group(1).lower()),
+             body[m.end():nxt.start() if nxt else len(body)].strip())
+            for m, nxt in zip(marks, marks[1:] + [None])]
 
 
 # ---------------------------------------------------------------- DEFINE
@@ -243,42 +203,6 @@ def _compile_define(cond: str, columns: "set[str]"):
     return fn
 
 
-def _split_kw(e: str, kw: str) -> "list[str]":
-    """Split at depth-0 occurrences of the word ``kw``."""
-    pat = re.compile(rf"\b{kw}\b", re.I)
-    parts, depth, cur, i = [], 0, [], 0
-    while i < len(e):
-        if e[i] == "(":
-            depth += 1
-        elif e[i] == ")":
-            depth -= 1
-        m = pat.match(e, i) if depth == 0 else None
-        if m:
-            parts.append("".join(cur))
-            cur = []
-            i = m.end()
-            continue
-        cur.append(e[i])
-        i += 1
-    parts.append("".join(cur))
-    return [p.strip() for p in parts]
-
-
-def _outer_parens(e: str) -> bool:
-    """True when ``e`` is one fully-parenthesized group."""
-    if not (e.startswith("(") and e.endswith(")")):
-        return False
-    depth = 0
-    for i, ch in enumerate(e):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i == len(e) - 1
-    return False
-
-
 def _bool_to_pandas(e: str) -> str:
     """AND/OR → & / | with every operand parenthesized (& and | bind
     TIGHTER than comparisons in Python, the classic pandas trap);
@@ -286,10 +210,10 @@ def _bool_to_pandas(e: str) -> str:
     parens — ``(NOT (c <= 4)) AND ...`` — translate too (r10; the MR
     fuzzer surfaced the gap)."""
     e = e.strip()
-    ors = _split_kw(e, "or")
+    ors = sqltext.split(e, r"\bor\b")
     if len(ors) > 1:
         return " | ".join(f"({_bool_to_pandas(p)})" for p in ors)
-    ands = _split_kw(e, "and")
+    ands = sqltext.split(e, r"\band\b")
     if len(ands) > 1:
         return " & ".join(f"({_bool_to_pandas(p)})" for p in ands)
     # NOT binds looser than comparison in SQL: NOT c = 3 is NOT (c = 3),
@@ -297,7 +221,7 @@ def _bool_to_pandas(e: str) -> str:
     m = re.match(r"^\s*not\b(.*)$", e, re.I | re.S)
     if m:
         return _negate(m.group(1).strip())
-    if _outer_parens(e):
+    if sqltext.wrapped(e):
         return f"({_bool_to_pandas(e[1:-1].strip())})"
     return e
 
@@ -314,20 +238,21 @@ def _negate(e: str) -> str:
     first row). A pandas ``~`` would instead turn the null comparison's
     False into True and admit rows SQL rejects."""
     e = e.strip()
-    ors = _split_kw(e, "or")
+    ors = sqltext.split(e, r"\bor\b")
     if len(ors) > 1:
         return " & ".join(f"({_negate(p)})" for p in ors)
-    ands = _split_kw(e, "and")
+    ands = sqltext.split(e, r"\band\b")
     if len(ands) > 1:
         return " | ".join(f"({_negate(p)})" for p in ands)
     m = re.match(r"^\s*not\b(.*)$", e, re.I | re.S)
     if m:  # double negation
         return _bool_to_pandas(m.group(1).strip())
-    if _outer_parens(e):
+    if sqltext.wrapped(e):
         return f"({_negate(e[1:-1].strip())})"
-    for mt in _CMP_TOK.finditer(e):
-        if e[:mt.start()].count("(") == e[:mt.start()].count(")"):
-            return e[:mt.start()] + _CMP_FLIP[mt.group(0)] + e[mt.end():]
+    cmps = sqltext.top(e, _CMP_TOK)
+    if cmps:
+        mt = cmps[0]
+        return e[:mt.start()] + _CMP_FLIP[mt.group(0)] + e[mt.end():]
     raise MatchRecognizeUnsupported(
         f"cannot negate DEFINE term: {e!r}")
 
@@ -755,10 +680,12 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
     from drill_calcite_spark.operators.match_recognize import match_recognize
     from drill_calcite_spark.sql import rewrite
 
-    head = _MR_HEAD.search(text)
-    open_at = text.index("(", head.start())
-    end = _balanced_span(text, open_at)
-    body = text[open_at + 1:end - 1]
+    head = _mr_head(text)
+    end = sqltext.close(text, head.end() - 1)
+    if end is None:
+        raise MatchRecognizeUnsupported(
+            "unbalanced parens in MATCH_RECOGNIZE")
+    body = text[head.end():end - 1]
 
     # the table expression feeding MATCH_RECOGNIZE: the word before it
     src_m = re.search(r"\bfrom\s+(\w+)\s*$", text[:head.start()], re.I)
@@ -774,13 +701,13 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
     if "pattern" not in clauses or "define" not in clauses:
         raise MatchRecognizeUnsupported("PATTERN and DEFINE are required")
 
-    part_cols = ([c.strip() for c in _split_top(clauses["partition by"])]
+    part_cols = ([c.strip() for c in sqltext.split(clauses["partition by"])]
                  if "partition by" in clauses else [])
     if "order by" not in clauses:
         raise MatchRecognizeUnsupported("ORDER BY is required")
     order_cols = [re.sub(r"\s+(asc|desc)$", "", c.strip(), flags=re.I)
-                  for c in _split_top(clauses["order by"])]
-    for c in _split_top(clauses["order by"]):
+                  for c in sqltext.split(clauses["order by"])]
+    for c in sqltext.split(clauses["order by"]):
         if re.search(r"\bdesc\b", c, re.I):
             raise MatchRecognizeUnsupported("DESC ordering in MR ORDER BY")
 
@@ -807,7 +734,7 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
     subset = None
     if "subset" in clauses:
         subset = {}
-        for item in _split_top(clauses["subset"]):
+        for item in sqltext.split(clauses["subset"]):
             sm = re.match(r"^(\w+)\s*=\s*\(([^)]*)\)$", item.strip())
             if not sm:
                 raise MatchRecognizeUnsupported(f"bad SUBSET item: {item!r}")
@@ -833,7 +760,7 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
 
     # DEFINE
     define = {}
-    for item in _split_top(clauses["define"]):
+    for item in sqltext.split(clauses["define"]):
         dm = re.match(r"^(\w+)\s+as\s+(.*)$", item.strip(), re.I | re.S)
         if not dm:
             raise MatchRecognizeUnsupported(f"bad DEFINE item: {item!r}")
@@ -849,7 +776,7 @@ def translate_match_recognize(spark: SparkSession, text: str) -> DataFrame:
     # MEASURES — (alias, python body, spark type)
     meas = []
     if "measures" in clauses:
-        for item in _split_top(clauses["measures"]):
+        for item in sqltext.split(clauses["measures"]):
             mm = re.match(r"^(.*)\s+as\s+(\w+)$", item.strip(), re.I | re.S)
             if not mm:
                 raise MatchRecognizeUnsupported(

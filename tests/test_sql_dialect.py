@@ -841,3 +841,31 @@ def test_front_door_leaves_group_by_ordinal_to_other_clients(spark):
         "SELECT k, count(*) AS n FROM ordinal_probe GROUP BY 1").collect()) \
         == [4, 4, 4]
     assert spark.conf.get("spark.sql.groupByOrdinal") == before
+
+
+def test_quoted_identifiers_are_opaque_to_scans(spark):
+    """Brackets and commas inside a quoted identifier are part of the
+    name: they neither end an ORDER BY item, nor add a LISTAGG argument,
+    nor end a GROUP BY key."""
+    from drill_calcite_spark.sql import calcite_sql
+
+    df = calcite_sql(spark, 'select "a)" from (values (2), (1)) '
+                     'as t("a)") order by "a)"')
+    assert [r[0] for r in df.collect()] == [1, 2]
+    df = calcite_sql(spark, "select listagg(\"x,y\") as s "
+                     "from (values ('p'), ('q')) as t(\"x,y\")")
+    assert sorted(df.collect()[0].s.split(",")) == ["p", "q"]
+    assert rewrite('select "c(", count(*) from t group by "c(", 1') \
+        .endswith("group by `c(`, CAST(1 AS INT)")
+
+
+def test_order_by_non_ascii_name():
+    """A non-ASCII letter in an ORDER BY item is part of the item (the
+    list scan used to spin on it forever)."""
+    assert rewrite("select a as é from t order by é desc") == (
+        "select a as é from t order by é desc NULLS FIRST")
+
+
+def test_quote_inside_quoted_identifier_opens_no_literal():
+    assert rewrite("""select 1 as "it's", 'x' as y from t""") == (
+        "select 1 as `it's`, 'x' as y from t")

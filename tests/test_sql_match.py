@@ -33,6 +33,32 @@ def test_sql_text_equals_operator_call(spark):
     assert a == b and len(a) > 0
 
 
+_XY_DEFINE = "DEFINE DOWN AS DOWN.value < PREV(DOWN.value),"
+
+
+@pytest.mark.parametrize("lit", ["'x,y'", "'a within b'", "')'"])
+def test_define_literal_is_opaque_to_clause_scans(spark, lit):
+    """A DEFINE literal holding a comma, a clause keyword or a paren
+    stays one literal. No event_type equals any of these literals, so
+    each variant returns the rows of the plain 'xy' variant."""
+    from drill_calcite_spark.queries.custom import _MR_SQL_TEXT
+
+    register_tables(spark, SF_DIR)
+
+    def rows(literal):
+        text = _MR_SQL_TEXT.replace(_XY_DEFINE, _XY_DEFINE.replace(
+            ",", f" AND DOWN.event_type <> {literal},"))
+        return sorted(map(tuple, calcite_sql(spark, text).collect()))
+
+    want = rows("'xy'")
+    assert len(want) > 0 and rows(lit) == want
+
+
+def test_match_recognize_inside_a_literal_is_text(spark):
+    df = calcite_sql(spark, "select 'see match_recognize(x)' as s")
+    assert [r.s for r in df.collect()] == ["see match_recognize(x)"]
+
+
 def test_one_row_per_match_with_aggregates(spark):
     register_tables(spark, SF_DIR)
     df = calcite_sql(spark, """
