@@ -30,10 +30,11 @@ own quidem expected outputs (tests/iq/):
    prefixes (Spark temp views are single-level).
 
 All rewrites are token scans. Quoting and nesting are read through
-``sqltext`` alone, the front door's one lexer: string literals and quoted
-identifiers are opaque to every scan, as are brackets inside them. None
-touch query STRUCTURE — Catalyst still owns parsing, validation, and
-planning (SURVEY §0 role map).
+``sqltext`` alone, the front door's one lexer. ``rewrite`` shields every
+quoted token once, on entry (``_shield``), so no scan sees inside a
+string literal or a quoted identifier; call rewrites go through one
+driver (``_calls``). None touch query STRUCTURE — Catalyst still owns
+parsing, validation, and planning (SURVEY §0 role map).
 """
 
 from __future__ import annotations
@@ -56,36 +57,81 @@ _LIST_END = re.compile(r"[)\]]|[A-Za-z][A-Za-z_0-9]*")
 
 
 # Control char that cannot appear in any SQL the front door accepts —
-# used to build inert placeholders for shielded string literals.
-_LIT_SENTINEL = "\x1f"
+# used to build inert placeholders for shielded quoted tokens.
+_SENTINEL = "\x1f"
+# a shielded quoted identifier; group 1 is its index in the shield list
+_IDENT = f"`{_SENTINEL}(\\d+){_SENTINEL}`"
+_IDENT_RE = re.compile(_IDENT)
+_PLACEHOLDER = re.compile(f"{_IDENT}|{_SENTINEL}(\\d+){_SENTINEL}")
 
 
-def _shield_literals(text: str) -> "tuple[str, list[str]]":
-    """Replace every single-quoted literal's CONTENT with an inert
-    placeholder (``'\\x1f<k>\\x1f'``) so NO token rewrite can match
-    inside it — keywords in literal text ('has pi here',
-    'floor(d to day)', '(table t2)') must survive the pipeline verbatim.
-    ``_unshield_literals`` restores the bodies after all rewrites ran.
-    Quoted identifiers are NOT shielded (``_rewrite_dquote_idents``
-    needs their contents), and a ' inside one opens no literal. Doubled
-    '' escapes stay inside the captured body and restore exactly. An
-    unterminated literal (an odd count of quotes) is left as it is."""
-    lits: list[str] = []
+def _shield(text: str) -> "tuple[str, list[str]]":
+    """Replace every quoted token with an inert placeholder so NO token
+    rewrite can match inside it: keywords in literal text ('has pi
+    here', '(table t2)') and in quoted names ("floor(d to day)") must
+    survive the pipeline verbatim. A string literal keeps its quotes
+    around ``\\x1f<k>\\x1f``; a quoted identifier (``"…"`` or backticks)
+    becomes ``\\`\\x1f<k>\\x1f\\```. Entry k of the returned list is the
+    literal's body or the identifier token as written; the few passes
+    that read a name (schema and sequence references, the HOP/SESSION
+    shadow guards) read it there through ``_name``. Doubled-quote
+    escapes stay inside the kept text and restore exactly. An
+    unterminated literal (an odd count of quotes) is left as it is; an
+    unterminated identifier runs to the end of the text."""
+    shielded: list[str] = []
     out: list[str] = []
     last = 0
     for s, e in sqltext.quoted(text):
-        if text[s] == "'" and text.count("'", s, e) % 2 == 0:
-            out += [text[last:s],
-                    f"'{_LIT_SENTINEL}{len(lits)}{_LIT_SENTINEL}'"]
-            lits.append(text[s + 1:e - 1])
-            last = e
-    return "".join(out) + text[last:], lits
+        if text[s] != "'":
+            out += [text[last:s], f"`{_SENTINEL}{len(shielded)}{_SENTINEL}`"]
+            shielded.append(text[s:e])
+        elif text.count("'", s, e) % 2 == 0:
+            out += [text[last:s], f"'{_SENTINEL}{len(shielded)}{_SENTINEL}'"]
+            shielded.append(text[s + 1:e - 1])
+        else:
+            continue
+        last = e
+    return "".join(out) + text[last:], shielded
 
 
-def _unshield_literals(text: str, lits: "list[str]") -> str:
-    return re.sub(
-        f"{_LIT_SENTINEL}(\\d+){_LIT_SENTINEL}",
-        lambda m: lits[int(m.group(1))], text)
+def _name(token: str) -> str:
+    """The name a quoted identifier token spells: Calcite lexes
+    ``"…"`` as an identifier (Parser.jj DQID), a doubled quote inside it
+    as one quote."""
+    q = token[0]
+    end = -1 if len(token) > 1 and token.count(q) % 2 == 0 else None
+    return token[1:end].replace(q * 2, q)
+
+
+def _unshield(text: str, shielded: "list[str]") -> str:
+    """Literal bodies back inside their quotes; identifiers in
+    backticks, Spark's quoting."""
+    def put(m: "re.Match[str]") -> str:
+        if m.group(1) is None:
+            return shielded[int(m.group(2))]
+        return "`" + _name(shielded[int(m.group(1))]).replace("`", "``") + "`"
+
+    return _PLACEHOLDER.sub(put, text)
+
+
+def _calls(text: str, head: "re.Pattern[str]", repl) -> str:
+    """``text`` with each call that ``head`` finds replaced by
+    ``repl(match, args)``. ``head`` ends at the call's opening bracket;
+    ``args`` is the text up to the matching closer, cut at depth-0
+    commas. A call stays as it is when ``repl`` returns None, and so
+    does the rest of the text after an unclosed call. Calls nested in
+    the arguments are replaced first, so ``repl`` sees them done."""
+    out, pos = [], 0
+    while m := head.search(text, pos):
+        end = sqltext.close(text, m.end() - 1)
+        if end is None:
+            break
+        inner = _calls(text[m.end():end - 1], head, repl)
+        new = repl(m, sqltext.split(inner))
+        out += [text[pos:m.start()],
+                m.group(0) + inner + text[end - 1] if new is None else new]
+        pos = end
+    return "".join(out) + text[pos:]
 
 
 def _word_at(text: str, i: int) -> str:
@@ -150,7 +196,7 @@ def _dr_year_range(col: str, op: str, year: int,
 
     def lit(y: int) -> str:
         lits.append(f"{y:04d}-01-01")
-        return f"date '{_LIT_SENTINEL}{len(lits) - 1}{_LIT_SENTINEL}'"
+        return f"date '{_SENTINEL}{len(lits) - 1}{_SENTINEL}'"
 
     if op == "=":
         return f"({col} >= {lit(year)} and {col} < {lit(year + 1)})"
@@ -174,9 +220,9 @@ _DR_FLOOR = re.compile(
     rf"\b(floor|ceil|ceiling)\s*\(\s*([\w.]+)\s+to\s+"
     rf"(year|quarter|month|day|hour)\s*\)"
     rf"\s*{_DR_CMP}\s*(date|timestamp)\s+"
-    f"'{_LIT_SENTINEL}(\\d+){_LIT_SENTINEL}'", re.I)
+    f"'{_SENTINEL}(\\d+){_SENTINEL}'", re.I)
 _DR_FLOOR_FLIP = re.compile(
-    rf"\b(date|timestamp)\s+'{_LIT_SENTINEL}(\d+){_LIT_SENTINEL}'"
+    rf"\b(date|timestamp)\s+'{_SENTINEL}(\d+){_SENTINEL}'"
     rf"\s*{_DR_CMP}\s*"
     r"(floor|ceil|ceiling)\s*\(\s*([\w.]+)\s+to\s+"
     r"(year|quarter|month|day|hour)\s*\)",
@@ -226,7 +272,7 @@ def _dr_floor_range(fn: str, col: str, unit: str, op: str, kw: str,
 
     def lit(d: "_dt.datetime") -> str:
         lits.append(d.strftime(fmt))
-        return f"{kw} '{_LIT_SENTINEL}{len(lits) - 1}{_LIT_SENTINEL}'"
+        return f"{kw} '{_SENTINEL}{len(lits) - 1}{_SENTINEL}'"
 
     if fn == "floor":
         if op == "=":
@@ -318,7 +364,7 @@ def _dr_unit_in_year_range(col: str, year: int, op: str, k: int,
         y = year + (unit_idx - 1) * width // 12
         mo = ((unit_idx - 1) * width) % 12 + 1
         lits.append(f"{y:04d}-{mo:02d}-01")
-        return f"date '{_LIT_SENTINEL}{len(lits) - 1}{_LIT_SENTINEL}'"
+        return f"date '{_SENTINEL}{len(lits) - 1}{_SENTINEL}'"
 
     lo = max(1, min(k, per_year + 1))          # unit index bounds
     hi = max(1, min(k + 1, per_year + 1))
@@ -377,7 +423,7 @@ def _dr_day_range(col: str, year: int, month: int, day: int,
 
     def lit(d: "_dt.date") -> str:
         lits.append(d.isoformat())
-        return f"date '{_LIT_SENTINEL}{len(lits) - 1}{_LIT_SENTINEL}'"
+        return f"date '{_SENTINEL}{len(lits) - 1}{_SENTINEL}'"
 
     return f"({col} >= {lit(start)} and {col} < {lit(nxt)})"
 
@@ -551,6 +597,11 @@ def _rewrite_date_ranges(text: str, lits: "list[str]") -> str:
     return _DR_FLOOR_FLIP.sub(flo_flip, text)
 
 
+_FLOOR_HEAD = re.compile(r"\b(floor|ceil|ceiling)\s*\(", re.I)
+_FLOOR_TAIL = re.compile(
+    r"\s+to\s+(year|quarter|month|week|day|hour|minute|second)\s*$", re.I)
+
+
 def _rewrite_floor_to(text: str) -> str:
     """FLOOR(x TO unit) → date_trunc('UNIT', x);
     CEIL(x TO unit) → already-aligned guard + one interval step:
@@ -560,34 +611,18 @@ def _rewrite_floor_to(text: str) -> str:
     the unit boundary is its own ceiling) in pure Catalyst expressions.
     WEEK follows date_trunc's Monday start, the same convention the
     FLOOR rewrite (and the green quidem corpus) already pins."""
-    head = re.compile(r"\b(floor|ceil|ceiling)\s*\(", re.I)
-    tail = re.compile(
-        r"\s+to\s+(year|quarter|month|week|day|hour|minute|second)\s*$",
-        re.I)
-    pos = 0
-    while True:
-        m = head.search(text, pos)
-        if not m:
-            return text
-        i = sqltext.close(text, m.end() - 1)
-        if i is None:
-            return text
-        args = text[m.end():i - 1]
-        tm = tail.search(args)
+    def repl(m: "re.Match[str]", args: "list[str]") -> "str | None":
+        tm = _FLOOR_TAIL.search(",".join(args))
         if not tm:
-            pos = m.end()  # plain numeric floor/ceil — leave untouched
-            continue
-        x, unit = args[:tm.start()], tm.group(1).lower()
+            return None  # plain numeric floor/ceil — leave untouched
+        x, unit = tm.string[:tm.start()], tm.group(1).lower()
         tr = f"date_trunc('{unit.upper()}', {x})"
-        if m.group(1).lower() in ("ceil", "ceiling"):
-            repl = (f"(case when {tr} = {x} then {tr} "
-                    f"else {tr} + {_CEIL_STEP[unit]} end)")
-        else:
-            repl = tr
-        text = text[:m.start()] + repl + text[i:]
-        # rescan from the replacement start: x may itself contain a
-        # nested FLOOR/CEIL-to-unit (date_trunc never re-matches)
-        pos = m.start()
+        if m.group(1).lower() == "floor":
+            return tr
+        return (f"(case when {tr} = {x} then {tr} "
+                f"else {tr} + {_CEIL_STEP[unit]} end)")
+
+    return _calls(text, _FLOOR_HEAD, repl)
 
 
 # TUMBLE group-window width in epoch micros per FIXED-WIDTH unit.
@@ -607,7 +642,10 @@ class TumbleUnsupported(ValueError):
     the 3-arg offset form) — loud-fail, never silently wrong."""
 
 
-def _rewrite_tumble(text: str, lits: "list[str]") -> str:
+_TUMBLE_HEAD = re.compile(r"\b(tumble_start|tumble_end|tumble)\s*\(", re.I)
+
+
+def _rewrite_tumble(text: str, shielded: "list[str]") -> str:
     """``TUMBLE(ts, INTERVAL 'n' unit)`` / ``TUMBLE_START`` /
     ``TUMBLE_END`` — Calcite's $TUMBLE group-window family
     (SqlStdOperatorTable.java:2255-2287: TUMBLE in GROUP BY with the
@@ -625,72 +663,32 @@ def _rewrite_tumble(text: str, lits: "list[str]") -> str:
     streaming battery's ``stream_tumble_hourly`` (window() + watermark);
     this rewrite is the batch GROUP BY form.
 
-    The interval literal rides through ``_shield_literals`` — its body
-    is recovered from ``lits``. Variable-width units (MONTH/YEAR) and
+    The interval literal rides through ``_shield`` — its body is
+    recovered from ``shielded``. Variable-width units (MONTH/YEAR) and
     the 3-arg offset form raise :class:`TumbleUnsupported`."""
-    head = re.compile(r"\b(tumble_start|tumble_end|tumble)\s*\(", re.I)
-    interval = re.compile(
-        rf"^\s*interval\s+(?:'{_LIT_SENTINEL}(\d+){_LIT_SENTINEL}'|(\d+))"
-        r"\s+(year|quarter|month|week|day|hour|minute|second)\s*$", re.I)
-    pos = 0
-    while True:
-        m = head.search(text, pos)
-        if not m:
-            return text
-        i = sqltext.close(text, m.end() - 1)
-        if i is None:
-            return text
-        args_split = sqltext.split(text[m.end():i - 1])
-        if len(args_split) != 2:
+    def repl(m: "re.Match[str]", args: "list[str]") -> str:
+        kind = m.group(1).upper()
+        if len(args) != 2:
             raise TumbleUnsupported(
-                f"{m.group(1).upper()} takes (datetime, interval); the "
-                f"3-arg offset form is not supported "
-                f"(got {len(args_split)} args)")
-        x, iv = args_split[0].strip(), args_split[1]
-        im = interval.match(iv)
-        if not im:
-            raise TumbleUnsupported(
-                f"{m.group(1).upper()} requires a constant INTERVAL "
-                f"second argument, got: {iv.strip()!r}")
-        n = int(lits[int(im.group(1))] if im.group(1) is not None
-                else im.group(2))
-        unit = im.group(3).lower()
-        if unit not in _TUMBLE_MICROS:
-            raise TumbleUnsupported(
-                f"TUMBLE window unit {unit.upper()} is not fixed-width")
-        w = n * _TUMBLE_MICROS[unit]
-        um = f"unix_micros({x})"
+                f"{kind} takes (datetime, interval); the 3-arg offset "
+                f"form is not supported (got {len(args)} args)")
+        w = _gw_micros(args[1], shielded, kind)
+        um = f"unix_micros({args[0].strip()})"
         start = f"timestamp_micros({um} - pmod({um}, {w}))"
-        if m.group(1).lower() == "tumble_end":
+        if kind == "TUMBLE_END":
             # wrap the WHOLE start expression (exact micros round-trip)
             # so it stays a subtree of the select expression — Spark then
             # matches it against the GROUP BY TUMBLE(...) key and the
             # aggregate resolves; a re-derived `... + w` spelling would
             # NOT match the grouping expression tree
-            repl = f"timestamp_micros(unix_micros({start}) + {w})"
-        else:
-            repl = start
-        text = text[:m.start()] + repl + text[i:]
-        pos = m.start() + len(repl)
+            return f"timestamp_micros(unix_micros({start}) + {w})"
+        return start
 
-
-def _gw_calls(text: str, head: "re.Pattern"):
-    """Yield (match, end_index, args) for each ``head``-matched call,
-    split into its top-level comma-separated arguments."""
-    pos = 0
-    while True:
-        m = head.search(text, pos)
-        if not m:
-            return
-        i = sqltext.close(text, m.end() - 1)
-        if i is None:
-            return
-        yield m, i, sqltext.split(text[m.end():i - 1])
-        pos = i
+    return _calls(text, _TUMBLE_HEAD, repl)
 
 
 _GW_INTERVAL = re.compile(
-    rf"^\s*interval\s+(?:'{_LIT_SENTINEL}(\d+){_LIT_SENTINEL}'|(\d+))"
+    rf"^\s*interval\s+(?:'{_SENTINEL}(\d+){_SENTINEL}'|(\d+))"
     r"\s+(year|quarter|month|week|day|hour|minute|second)\s*$", re.I)
 
 
@@ -712,7 +710,20 @@ def _gw_micros(arg: str, lits: "list[str]", op: str) -> int:
     return n * _TUMBLE_MICROS[unit]
 
 
-def _rewrite_hop(text: str, lits: "list[str]") -> str:
+def _binds(text: str, shielded: "list[str]", name: str) -> bool:
+    """True when ``text`` names ``name``, bare or as a quoted
+    identifier."""
+    return (re.search(rf"\b{name}\b", text, re.I) is not None
+            or any(_name(shielded[int(k)]).lower() == name
+                   for k in _IDENT_RE.findall(text)))
+
+
+_HOP_HEAD = re.compile(r"\b(hop_start|hop_end|hop)\s*\(", re.I)
+_SESSION_HEAD = re.compile(r"\b(session_start|session_end|session)\s*\(",
+                           re.I)
+
+
+def _rewrite_hop(text: str, shielded: "list[str]") -> str:
     """``HOP(ts, slide, size)`` / ``HOP_START`` / ``HOP_END`` —
     Calcite's $HOP group-window family (SqlStdOperatorTable.java's
     HopTableFunction lineage; Calcite streaming docs spell the GROUP BY
@@ -728,52 +739,43 @@ def _rewrite_hop(text: str, lits: "list[str]") -> str:
     size). One HOP argument triple per statement — the auxiliaries drop
     their arguments in the rewrite, so mixed triples would silently
     cross-wire and are rejected loudly instead."""
-    head = re.compile(r"\b(hop_start|hop_end|hop)\s*\(", re.I)
     # The rewrite rebinds the bare name `window` (Spark's grouping-struct
     # name) for the auxiliary START/END references; a statement that
     # already binds or references that identifier would mis-resolve
     # SILENTLY — enforce the documented constraint loudly (r9 ADVICE).
-    if head.search(text) and re.search(r"\bwindow\b", text, re.I):
+    if _HOP_HEAD.search(text) and _binds(text, shielded, "window"):
         raise TumbleUnsupported(
             "HOP rewrite reserves the identifier `window` for Spark's "
             "grouping struct; rename the conflicting column/alias")
-    out, triples = text, set()
-    while True:
-        found = False
-        for m, end, args in _gw_calls(out, head):
-            kind = m.group(1).lower()
-            if len(args) != 3:
-                raise TumbleUnsupported(
-                    f"{kind.upper()} takes (datetime, slide, size); the "
-                    f"4-arg offset form is not supported "
-                    f"(got {len(args)} args)")
-            x = args[0].strip()
-            s = _gw_micros(args[1], lits, kind.upper())
-            z = _gw_micros(args[2], lits, kind.upper())
-            if s > z:
-                raise TumbleUnsupported(
-                    f"{kind.upper()}: slide must not exceed size "
-                    f"({s} > {z} micros)")
-            triples.add((x.lower(), s, z))
-            if len(triples) > 1:
-                raise TumbleUnsupported(
-                    "one HOP (datetime, slide, size) triple per "
-                    f"statement, saw: {sorted(triples)}")
-            if kind == "hop":
-                repl = (f"window({x}, '{z} microseconds', "
-                        f"'{s} microseconds')")
-            elif kind == "hop_start":
-                repl = "window.start"
-            else:
-                repl = "window.end"
-            out = out[:m.start()] + repl + out[end:]
-            found = True
-            break
-        if not found:
-            return out
+    triples = set()
+
+    def repl(m: "re.Match[str]", args: "list[str]") -> str:
+        kind = m.group(1).lower()
+        if len(args) != 3:
+            raise TumbleUnsupported(
+                f"{kind.upper()} takes (datetime, slide, size); the "
+                f"4-arg offset form is not supported "
+                f"(got {len(args)} args)")
+        x = args[0].strip()
+        s = _gw_micros(args[1], shielded, kind.upper())
+        z = _gw_micros(args[2], shielded, kind.upper())
+        if s > z:
+            raise TumbleUnsupported(
+                f"{kind.upper()}: slide must not exceed size "
+                f"({s} > {z} micros)")
+        triples.add((x.lower(), s, z))
+        if len(triples) > 1:
+            raise TumbleUnsupported(
+                "one HOP (datetime, slide, size) triple per "
+                f"statement, saw: {sorted(triples)}")
+        if kind == "hop":
+            return f"window({x}, '{z} microseconds', '{s} microseconds')"
+        return "window.start" if kind == "hop_start" else "window.end"
+
+    return _calls(text, _HOP_HEAD, repl)
 
 
-def _rewrite_session(text: str, lits: "list[str]") -> str:
+def _rewrite_session(text: str, shielded: "list[str]") -> str:
     """``SESSION(ts, gap)`` / ``SESSION_START`` / ``SESSION_END`` —
     Calcite's $SESSION group-window family → Spark's native
     ``session_window(ts, gap)``: windows merge events whose gaps stay
@@ -782,39 +784,33 @@ def _rewrite_session(text: str, lits: "list[str]") -> str:
     ``session_window(x, 'G microseconds')``, SESSION_START →
     ``session_window.start``, SESSION_END → ``session_window.end``.
     Same one-argument-pair-per-statement contract as _rewrite_hop."""
-    head = re.compile(r"\b(session_start|session_end|session)\s*\(", re.I)
     # same loud-fail shadow guard as _rewrite_hop (r9 ADVICE)
-    if head.search(text) and re.search(r"\bsession_window\b", text, re.I):
+    if _SESSION_HEAD.search(text) and _binds(text, shielded,
+                                             "session_window"):
         raise TumbleUnsupported(
             "SESSION rewrite reserves the identifier `session_window` for "
             "Spark's grouping struct; rename the conflicting column/alias")
-    out, pairs = text, set()
-    while True:
-        found = False
-        for m, end, args in _gw_calls(out, head):
-            kind = m.group(1).lower()
-            if len(args) != 2:
-                raise TumbleUnsupported(
-                    f"{kind.upper()} takes (datetime, gap), got "
-                    f"{len(args)} args")
-            x = args[0].strip()
-            g = _gw_micros(args[1], lits, kind.upper())
-            pairs.add((x.lower(), g))
-            if len(pairs) > 1:
-                raise TumbleUnsupported(
-                    "one SESSION (datetime, gap) pair per statement, "
-                    f"saw: {sorted(pairs)}")
-            if kind == "session":
-                repl = f"session_window({x}, '{g} microseconds')"
-            elif kind == "session_start":
-                repl = "session_window.start"
-            else:
-                repl = "session_window.end"
-            out = out[:m.start()] + repl + out[end:]
-            found = True
-            break
-        if not found:
-            return out
+    pairs = set()
+
+    def repl(m: "re.Match[str]", args: "list[str]") -> str:
+        kind = m.group(1).lower()
+        if len(args) != 2:
+            raise TumbleUnsupported(
+                f"{kind.upper()} takes (datetime, gap), got "
+                f"{len(args)} args")
+        x = args[0].strip()
+        g = _gw_micros(args[1], shielded, kind.upper())
+        pairs.add((x.lower(), g))
+        if len(pairs) > 1:
+            raise TumbleUnsupported(
+                "one SESSION (datetime, gap) pair per statement, "
+                f"saw: {sorted(pairs)}")
+        if kind == "session":
+            return f"session_window({x}, '{g} microseconds')"
+        return ("session_window.start" if kind == "session_start"
+                else "session_window.end")
+
+    return _calls(text, _SESSION_HEAD, repl)
 
 
 # ------------------------------------------------- grouping-function glue
@@ -830,8 +826,8 @@ def _rewrite_session(text: str, lits: "list[str]") -> str:
 
 
 _IVL_PROD = re.compile(
-    rf"([A-Za-z_][\w.]*|\"[\w$]+\")\s*\*\s*interval\s+(-)?\s*"
-    rf"'{_LIT_SENTINEL}(\d+){_LIT_SENTINEL}'\s+"
+    rf"([A-Za-z_][\w.]*|`{_SENTINEL}\d+{_SENTINEL}`)\s*\*\s*interval\s+(-)?\s*"
+    rf"'{_SENTINEL}(\d+){_SENTINEL}'\s+"
     r"(year|month|day|hour|minute|second)s?(?:\s+to\s+"
     r"(month|minute|second))?", re.I)
 
@@ -900,7 +896,7 @@ def _rewrite_interval_products(text: str, lits: "list[str]") -> str:
 
 _PERIOD_CTOR = re.compile(r"\bperiod\s*\(", re.I)
 _PERIOD_IVL = re.compile(
-    rf"^\s*interval\s+(-)?\s*'{_LIT_SENTINEL}(\d+){_LIT_SENTINEL}'\s+"
+    rf"^\s*interval\s+(-)?\s*'{_SENTINEL}(\d+){_SENTINEL}'\s+"
     r"(year|month|day|hour|minute|second)s?\s*$", re.I)
 _PERIOD_MS = {"day": 86_400_000, "hour": 3_600_000, "minute": 60_000,
               "second": 1_000}
@@ -919,32 +915,26 @@ def _rewrite_period_ctor(text: str, lits: "list[str]") -> str:
     (start, end) pair path instead (queries/funcs.py period ops) —
     this rewrite covers only the bare constructor's rendering
     contract, which is all Calcite itself implements."""
-    while True:
-        m = _PERIOD_CTOR.search(text)
-        if not m:
-            return text
-        i = sqltext.close(text, m.end() - 1)
-        commas = [] if i is None else sqltext.top(text[m.end():i - 1], ",")
-        if not commas:
-            return text
-        comma = m.end() + commas[-1].start()
+    def comp(a: str) -> str:
+        im = _PERIOD_IVL.match(a)
+        if im:
+            body = lits[int(im.group(2))].strip()
+            n = int(body.lstrip("-"))
+            neg = bool(im.group(1)) != body.startswith("-")
+            unit = im.group(3).lower()
+            v = (n * 12 if unit == "year" else n
+                 if unit == "month" else n * _PERIOD_MS[unit])
+            return str(-v if neg else v)
+        return (f"cast(datediff(cast(({a}) as date), "
+                f"date '1970-01-01') as int)")
 
-        def comp(a: str) -> str:
-            im = _PERIOD_IVL.match(a)
-            if im:
-                body = lits[int(im.group(2))].strip()
-                n = int(body.lstrip("-"))
-                neg = bool(im.group(1)) != body.startswith("-")
-                unit = im.group(3).lower()
-                v = (n * 12 if unit == "year" else n
-                     if unit == "month" else n * _PERIOD_MS[unit])
-                return str(-v if neg else v)
-            return (f"cast(datediff(cast(({a}) as date), "
-                    f"date '1970-01-01') as int)")
+    def repl(m: "re.Match[str]", args: "list[str]") -> "str | None":
+        if len(args) < 2:
+            return None
+        return (f"struct({comp(','.join(args[:-1]).strip())}, "
+                f"{comp(args[-1].strip())})")
 
-        repl = (f"struct({comp(text[m.end():comma].strip())}, "
-                f"{comp(text[comma + 1:i - 1].strip())})")
-        text = text[:m.start()] + repl + text[i:]
+    return _calls(text, _PERIOD_CTOR, repl)
 
 
 _JSON_EXISTS = re.compile(r"\bjson_exists\s*\(", re.I)
@@ -961,57 +951,40 @@ def _rewrite_json_exists(text: str, lits: "list[str]") -> str:
     documented divergence (the corpus case uses the default-equivalent
     FALSE). A JSON null value also reads as not-existing here (Spark
     renders it as SQL NULL) — same leniency family."""
-    pos = 0
-    while True:
-        m = _JSON_EXISTS.search(text, pos)
-        if not m:
-            return text
-        close = sqltext.close(text, m.end() - 1)
-        if close is None:
-            return text
-        parts = [p.strip() for p in sqltext.split(text[m.end():close - 1])]
+    def repl(m: "re.Match[str]", args: "list[str]") -> "str | None":
+        parts = [p.strip() for p in args]
         if len(parts) != 2:
-            pos = m.end()
-            continue
+            return None
         j, path = parts
         pm = re.match(
-            rf"^'{_LIT_SENTINEL}(\d+){_LIT_SENTINEL}'"
+            rf"^'{_SENTINEL}(\d+){_SENTINEL}'"
             r"(?:\s+(true|false|unknown|error)\s+on\s+error)?$",
             path, re.I)
         if not pm:
-            pos = m.end()
-            continue
-        body = re.sub(r"^\s*(strict|lax)\s+", "",
-                      lits[int(pm.group(1))], flags=re.I)
-        lits.append(body)
-        newlit = f"'{_LIT_SENTINEL}{len(lits) - 1}{_LIT_SENTINEL}'"
-        repl = f"(get_json_object({j}, {newlit}) is not null)"
-        text = text[:m.start()] + repl + text[close:]
-        pos = m.start() + len(repl)
+            return None
+        lits.append(re.sub(r"^\s*(strict|lax)\s+", "",
+                           lits[int(pm.group(1))], flags=re.I))
+        newlit = f"'{_SENTINEL}{len(lits) - 1}{_SENTINEL}'"
+        return f"(get_json_object({j}, {newlit}) is not null)"
+
+    return _calls(text, _JSON_EXISTS, repl)
+
+
+_GROUPING_HEAD = re.compile(r"\b(grouping_id|grouping)\s*\(", re.I)
 
 
 def _rewrite_grouping_funcs(text: str) -> str:
-    text = re.sub(r"\bgroup_id\s*\(\s*\)", "0", text, flags=re.I)
-    pat = re.compile(r"\b(grouping_id|grouping)\s*\(", re.I)
-    pos = 0
-    while True:
-        m = pat.search(text, pos)
-        if not m:
-            return text
-        close = sqltext.close(text, m.end() - 1)
-        if close is None:
-            return text
-        items = [a.strip() for a in sqltext.split(text[m.end():close - 1])]
+    def repl(m: "re.Match[str]", args: "list[str]") -> "str | None":
+        items = [a.strip() for a in args]
         if m.group(1).lower() == "grouping" and len(items) == 1:
-            pos = m.end()  # native single-column grouping
-            continue
+            return None  # native single-column grouping
         k = len(items)
-        repl = "(" + " + ".join(
+        return "(" + " + ".join(
             f"grouping({a}) * {2 ** (k - 1 - i)}" if k - 1 - i else
             f"grouping({a})"
             for i, a in enumerate(items)) + ")"
-        text = text[:m.start()] + repl + text[close:]
-        pos = m.start() + len(repl)
+
+    return _calls(text, _GROUPING_HEAD, repl)
 
 
 _HAVING_KW = re.compile(r"\bhaving\b", re.I)
@@ -1136,26 +1109,20 @@ def _rewrite_orderby_grouping(text: str) -> str:
             + (" " + text[items_end:] if lim else ""))
 
 
+_GROUPING_SETS_HEAD = re.compile(r"\bgrouping\s+sets\s*\(", re.I)
+
+
 def _rewrite_grouping_sets_dedup(text: str) -> str:
-    pat = re.compile(r"\bgrouping\s+sets\s*\(", re.I)
-    pos = 0
-    while True:
-        m = pat.search(text, pos)
-        if not m:
-            return text
-        close = sqltext.close(text, m.end() - 1)
-        if close is None:
-            return text
+    def repl(m: "re.Match[str]", args: "list[str]") -> str:
         seen, kept = set(), []
-        for item in sqltext.split(text[m.end():close - 1]):
+        for item in args:
             key = re.sub(r"\s+", "", item).lower()
-            if key in seen:
-                continue
-            seen.add(key)
-            kept.append(item.strip())
-        repl = "grouping sets (" + ", ".join(kept) + ")"
-        text = text[:m.start()] + repl + text[close:]
-        pos = m.start() + len(repl)
+            if key not in seen:
+                seen.add(key)
+                kept.append(item.strip())
+        return "grouping sets (" + ", ".join(kept) + ")"
+
+    return _calls(text, _GROUPING_SETS_HEAD, repl)
 
 
 # words that end a GROUP BY list at its own paren depth
@@ -1191,9 +1158,7 @@ def _rewrite_group_ordinals(text: str) -> str:
     1 (SqlConformance.isGroupByOrdinal() = false), Spark as the first
     select item. Rewrite every GROUP BY list so Spark sees no bare integer
     key; ORDER BY ordinals stay ordinals in both (isSortByOrdinal())."""
-    mask = sqltext.mask(text)
-    for m in reversed([m for m in _GROUP_BY_KW.finditer(text)
-                       if not mask[m.start()]]):
+    for m in reversed(list(_GROUP_BY_KW.finditer(text))):
         items = _order_items(text, m.end(), _GROUP_BY_END)
         if items:
             end = items[-1][1]
@@ -1205,17 +1170,19 @@ def _rewrite_group_ordinals(text: str) -> str:
 # ------------------------------------------------------------- sequences
 _SEQ_REF = re.compile(
     r"\b(next|current)\s+value\s+for\s+"
-    r"((?:\"[\w$]+\"|\w+)(?:\s*\.\s*(?:\"[\w$]+\"|\w+))?)", re.I)
+    rf"((?:{_IDENT}|\w+)(?:\s*\.\s*(?:{_IDENT}|\w+))?)", re.I)
 
 
-def _seq_name(ref: str) -> str:
-    """Normalize a possibly schema-qualified, possibly dquoted sequence
+def _seq_name(ref: str, shielded: "list[str]") -> str:
+    """Normalize a possibly schema-qualified, possibly quoted sequence
     reference to the bare lowercase name (the flat registry key)."""
     last = ref.split(".")[-1].strip()
-    return last.strip('"').lower()
+    quoted = _IDENT_RE.fullmatch(last)
+    return (_name(shielded[int(quoted.group(1))]) if quoted
+            else last).lower()
 
 
-def _rewrite_sequences(text: str) -> str:
+def _rewrite_sequences(text: str, shielded: "list[str]") -> str:
     """NEXT VALUE FOR seq → start-offset + ROW_NUMBER (one value per
     produced row); CURRENT VALUE FOR seq → the last issued value as a
     literal. Counter state lives in catalog._SEQUENCES; calcite_sql
@@ -1231,12 +1198,12 @@ def _rewrite_sequences(text: str) -> str:
 
     def sub(m: "re.Match[str]") -> str:
         kind = m.group(1).lower()
-        name = _seq_name(m.group(2))
-        seq = get_sequence(name)
+        seq = get_sequence(_seq_name(m.group(2), shielded))
         if seq is None:
-            raise ValueError(
-                f"calcite_sql: Table '{m.group(2)}' not found "
-                f"(not a registered sequence)")
+            ref = _IDENT_RE.sub(lambda q: shielded[int(q.group(1))],
+                                m.group(2))
+            raise ValueError(f"calcite_sql: Table '{ref}' not found "
+                             f"(not a registered sequence)")
         base, inc = seq["next"], seq["inc"]
         if kind == "next":
             return (f"(CAST({base - inc} AS BIGINT) + "
@@ -1293,7 +1260,7 @@ _NULL_CLAUSE = re.compile(r"\s+(null|absent)\s+on\s+null\s*$", re.I)
 _FORMAT_JSON = re.compile(r"\s+format\s+json\s*$", re.I)
 _ORDER_CLAUSE = re.compile(
     r"\s+order\s+by\s+(.+?)(\s+(asc|desc))?\s*$", re.I)
-_LIT_REF = re.compile(f"^\\s*'{_LIT_SENTINEL}(\\d+){_LIT_SENTINEL}'\\s*$")
+_LIT_REF = re.compile(f"^\\s*'{_SENTINEL}(\\d+){_SENTINEL}'\\s*$")
 
 
 def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
@@ -1303,19 +1270,13 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
     appended to ``lits`` so later pipeline passes cannot touch them."""
     def emit_lit(body: str) -> str:
         lits.append(body)
-        return f"'{_LIT_SENTINEL}{len(lits) - 1}{_LIT_SENTINEL}'"
+        return f"'{_SENTINEL}{len(lits) - 1}{_SENTINEL}'"
 
-    def one(m: "re.Match[str]") -> "str | None":
+    def repl(m: "re.Match[str]", args: "list[str]") -> str:
         fn = m.group(1).lower()
-        close = sqltext.close(text, m.end() - 1)
-        if close is None:
-            return None
-        args = text[m.end():close - 1]
-        if _JSON_CALL.search(args):
-            return None  # not innermost — recurse later
         if fn == "json_object":
             pairs = []
-            for part in sqltext.split(args):
+            for part in args:
                 k_txt, v_txt = sqltext.split(part, ":")
                 lm = _LIT_REF.match(k_txt)
                 if not lm:
@@ -1333,9 +1294,9 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
             body = " || ".join(
                 f"{emit_lit(('' if n == 0 else ',') + '%s:' % _jq(k))}"
                 f" || {v}" for n, (k, v) in enumerate(pairs))
-            repl = f"(({emit_lit('{')} || {body}) || {emit_lit('}')})"
+            out = f"(({emit_lit('{')} || {body}) || {emit_lit('}')})"
         elif fn == "json_objectagg":
-            a = args
+            a = ",".join(args)
             nc = _NULL_CLAUSE.search(a)
             absent = bool(nc and nc.group(1).lower() == "absent")
             if nc:
@@ -1354,12 +1315,12 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
                 f"WHEN l.b > r.b THEN 1 ELSE 0 END)")
             dq = emit_lit('"')
             mid = emit_lit('":')
-            repl = (f"(({emit_lit('{')} || concat_ws({emit_lit(',')}, "
+            out = (f"(({emit_lit('{')} || concat_ws({emit_lit(',')}, "
                     f"transform({sorted_}, _e -> "
                     f"concat({dq}, _e.k, {mid}, _e.v)))) "
                     f"|| {emit_lit('}')})")
         else:  # json_arrayagg
-            a = args
+            a = ",".join(args)
             nc = _NULL_CLAUSE.search(a)
             null_on_null = bool(nc and nc.group(1).lower() == "null")
             if nc:
@@ -1387,24 +1348,12 @@ def _rewrite_json_calls(text: str, lits: "list[str]") -> str:
                     f"array_sort({entries}, (l, r) -> "
                     f"CASE WHEN l.s < r.s THEN {lo} "
                     f"WHEN l.s > r.s THEN {hi} ELSE 0 END)")
-            repl = (f"(({emit_lit('[')} || concat_ws({emit_lit(',')}, "
+            out = (f"(({emit_lit('[')} || concat_ws({emit_lit(',')}, "
                     f"transform({entries}, _e -> _e.v))) "
                     f"|| {emit_lit(']')})")
-        return text[:m.start()] + repl + text[close:]
+        return out
 
-    guard_iters = 0
-    while True:
-        replaced = False
-        for m in _JSON_CALL.finditer(text):
-            new = one(m)
-            if new is not None:
-                text, replaced = new, True
-                break
-        if not replaced:
-            return text
-        guard_iters += 1
-        if guard_iters > 50:
-            raise ValueError("calcite_sql: json rewrite did not converge")
+    return _calls(text, _JSON_CALL, repl)
 
 
 def _jq(key: str) -> str:
@@ -1413,23 +1362,14 @@ def _jq(key: str) -> str:
     return f'"{key}"'
 
 
+_LISTAGG_HEAD = re.compile(r"\blistagg\s*\(", re.I)
+
+
 def _rewrite_listagg(text: str) -> str:
     """listagg(expr) → listagg(expr, ',') when the call has exactly one
     top-level argument (Calcite's default comma separator)."""
-    mask = sqltext.mask(text)
-    out, consumed = [], 0
-    for m in re.finditer(r"\blistagg\s*\(", text, re.I):
-        if mask[m.start()]:
-            continue
-        end = sqltext.close(text, m.end() - 1)
-        if end is None or sqltext.top(text[m.end():end - 1], ","):
-            continue
-        close = end - 1
-        out.append(text[consumed:close])
-        out.append(", ','")
-        consumed = close
-    out.append(text[consumed:])
-    return "".join(out)
+    return _calls(text, _LISTAGG_HEAD, lambda m, args: None if len(args) > 1
+                  else f"{m.group(0)}{args[0]}, ',')")
 
 
 def _order_items(text: str, start: int,
@@ -1453,11 +1393,8 @@ def _order_items(text: str, start: int,
 def _rewrite_nulls_high(text: str) -> str:
     """Append NULLS LAST (ASC) / NULLS FIRST (DESC) to every ORDER BY
     item lacking an explicit NULLS clause — Calcite's HIGH default."""
-    mask = sqltext.mask(text)
     edits: list[tuple[int, str]] = []
-    for m in re.finditer(r"\border\s+by\b", text, re.I):
-        if mask[m.start()]:
-            continue
+    for m in _ORDER_BY_KW.finditer(text):
         for a, b in _order_items(text, m.end()):
             item = text[a:b]
             words = [w.lower() for w in _WORD.findall(item)]
@@ -1483,19 +1420,24 @@ _ALIAS_STOPWORDS = {
 }
 
 
-def _rewrite_schema_refs(text: str, schema: str, prefix: str) -> str:
+def _rewrite_schema_refs(text: str, schema: str, prefix: str,
+                         shielded: "list[str]") -> str:
     """``"schema".tbl`` → ``prefix_tbl AS tbl`` — the implicit alias
     Calcite gives a schema-qualified table (queries then reference
     ``tbl.col``); the AS is suppressed when an explicit alias follows."""
     # schema may be quoted ("scott".emp) or bare (GEO."countries" —
     # spatial.iq addresses the geo catalog unquoted)
-    pat = re.compile(
-        rf'(?:"{re.escape(schema)}"|\b{re.escape(schema)}\b)'
-        rf'\s*\.\s*(?:([A-Za-z_]\w*)|"(\w+)")', re.I)
+    pat = re.compile(rf"(?:{_IDENT}|\b{re.escape(schema)}\b)"
+                     rf"\s*\.\s*(?:([A-Za-z_]\w*)|{_IDENT})", re.I)
     out, consumed = [], 0
     for m in pat.finditer(text):
+        if m.group(1) and _name(shielded[int(m.group(1))]).lower() \
+                != schema.lower():
+            continue  # another quoted name
+        tbl = m.group(2) or _name(shielded[int(m.group(3))])
+        if not re.fullmatch(r"\w+", tbl):
+            continue
         out.append(text[consumed:m.start()])
-        tbl = m.group(1) or m.group(2)
         if text[m.end():].lstrip().startswith("."):
             # 3-part COLUMN reference (CALCITE-356: schema.table.column,
             # misc.iq:22) — resolve through the implicit table alias
@@ -1511,39 +1453,6 @@ def _rewrite_schema_refs(text: str, schema: str, prefix: str) -> str:
         else:
             out.append(f"{prefix}{tbl} AS {tbl}")
         consumed = m.end()
-    out.append(text[consumed:])
-    return "".join(out)
-
-
-def _rewrite_dquote_idents(text: str) -> str:
-    """Calcite lexes double-quoted tokens as IDENTIFIERS (Parser.jj
-    DQID); Spark wants backticks. '...' string literals are untouched."""
-    out, last = [], 0
-    for s, e in sqltext.quoted(text):
-        if text[s] == '"':
-            body = text[s + 1:e - 1 if e - s > 1 and text[e - 1] == '"' else e]
-            out += [text[last:s], "`", body.replace('""', '"'), "`"]
-            last = e
-    return "".join(out) + text[last:]
-
-
-def _wrap_call(text: str, name: str, new_open: str, extra_close: str) -> str:
-    """Replace ``name(args)`` with ``new_open args extra_close )`` keeping
-    args balanced (e.g. fusion(x) → flatten(collect_list(x)))."""
-    mask = sqltext.mask(text)
-    out, consumed = [], 0
-    for m in re.finditer(rf"\b{name}\s*\(", text, re.I):
-        if mask[m.start()]:
-            continue
-        end = sqltext.close(text, m.end() - 1)
-        if end is None:
-            continue
-        close = end - 1
-        out.append(text[consumed:m.start()])
-        out.append(new_open)
-        out.append(text[m.end():close])
-        out.append(extra_close + ")")
-        consumed = close + 1
     out.append(text[consumed:])
     return "".join(out)
 
@@ -1603,11 +1512,11 @@ def _quant_lhs_span(text: str, op_start: int) -> "tuple[int, int] | None":
             return None
         # include a directly-attached function name, if any
         i = k - 1
-        while i >= 0 and (text[i].isalnum() or text[i] in "_`\"."):
+        while i >= 0 and (text[i].isalnum() or text[i] in "_`." + _SENTINEL):
             i -= 1
         return (i + 1, j + 1)
     k = j
-    while k >= 0 and (text[k].isalnum() or text[k] in "_`\".'"):
+    while k >= 0 and (text[k].isalnum() or text[k] in "_`.'" + _SENTINEL):
         k -= 1
     start = k + 1
     if start > j:
@@ -1651,20 +1560,16 @@ def _subquery_has_outer_refs(sub: str) -> bool:
     to Spark. Bare-column correlation is not detectable without a
     catalog and stays out of scope (as in Calcite's own
     RexSubQuery-decorrelation preconditions)."""
-    mask = sqltext.mask(sub)
+    sub = _shield(sub)[0]  # quoted tokens opaque on raw text too
     defined: "set[str]" = set()
     for m in _FROM_ITEM.finditer(sub):
-        if mask[m.start()]:
-            continue
         defined.update(p.lower() for p in m.group(1).split("."))
         if m.group(2) and m.group(2).lower() not in _SQL_KW:
             defined.add(m.group(2).lower())
     for m in _DERIVED_ALIAS.finditer(sub):
-        if not mask[m.start()] and m.group(1).lower() not in _SQL_KW:
+        if m.group(1).lower() not in _SQL_KW:
             defined.add(m.group(1).lower())
     for m in _QUAL_REF.finditer(sub):
-        if mask[m.start()]:
-            continue
         q = m.group(1).lower()
         if q not in defined and q not in _SQL_KW:
             return True
@@ -1694,15 +1599,7 @@ def _rewrite_projected_in_subquery(text: str) -> str:
     nearest preceding clause keyword: SELECT → value context, rewrite;
     anything else → filter context, leave."""
     pos = 0
-    while True:
-        mask = sqltext.mask(text)
-        m = None
-        for cand in _PROJ_IN_PAT.finditer(text, pos):
-            if not mask[cand.start()]:
-                m = cand
-                break
-        if m is None:
-            return text
+    while m := _PROJ_IN_PAT.search(text, pos):
         span = _quant_lhs_span(text, m.start())
         if span is None:
             pos = m.end()
@@ -1717,8 +1614,7 @@ def _rewrite_projected_in_subquery(text: str) -> str:
         # predicate's UNKNOWN-ness is OBSERVED by a following IS [NOT]
         # NULL (the IS UNKNOWN spelling, already rewritten above) —
         # Spark cannot even parse `x IN (sub) IS NULL`
-        kws = [k for k in _CTX_KW.finditer(text, 0, m.start())
-               if not mask[k.start()]]
+        kws = list(_CTX_KW.finditer(text, 0, m.start()))
         observed = re.match(r"\s*is\s+(not\s+)?null\b", text[i:], re.I)
         if (not kws or kws[-1].group(1).lower() != "select") \
                 and not observed:
@@ -1746,6 +1642,7 @@ def _rewrite_projected_in_subquery(text: str) -> str:
         repl = f"(NOT {case})" if neg else case
         text = text[:span[0]] + repl + text[i:]
         pos = span[0] + len(repl)
+    return text
 
 
 def _rewrite_row_in_nulllist(text: str) -> str:
@@ -1764,12 +1661,7 @@ def _rewrite_row_in_nulllist(text: str) -> str:
     Spark's native struct-IN."""
     pat = re.compile(r"\b(not\s+)?in\s*\(", re.I)
     pos = 0
-    while True:
-        mask = sqltext.mask(text)
-        m = next((c for c in pat.finditer(text, pos)
-                  if not mask[c.start()]), None)
-        if m is None:
-            return text
+    while m := pat.search(text, pos):
         i = sqltext.close(text, m.end() - 1)
         if i is None:
             return text
@@ -1804,7 +1696,7 @@ def _rewrite_row_in_nulllist(text: str) -> str:
         while b >= 0 and text[b].isspace():
             b -= 1
         e_w = b
-        while b >= 0 and (text[b].isalnum() or text[b] in '_"`'):
+        while b >= 0 and (text[b].isalnum() or text[b] in "_`" + _SENTINEL):
             b -= 1
         word = text[b + 1:e_w + 1].lower()
         if word and word not in ("where", "and", "or", "not", "when",
@@ -1823,6 +1715,7 @@ def _rewrite_row_in_nulllist(text: str) -> str:
         repl = f"(not ({ors}))" if m.group(1) else f"({ors})"
         text = text[:k] + repl + text[i:]
         pos = k + len(repl)
+    return text
 
 
 def _rewrite_quantified(text: str) -> str:
@@ -1831,15 +1724,8 @@ def _rewrite_quantified(text: str) -> str:
     NOT IN, ordered ops → Calcite's min/max + count-guard expansion
     (rules/SubQueryRemoveRule.java), preserving three-valued logic.
     The quidem some.iq corpus (NULL-element edge cases) is the check."""
-    mask = sqltext.mask(text)
     pos = 0
-    while True:
-        m = _QUANT_PAT.search(text, pos)
-        if not m:
-            return text
-        if mask[m.start()]:
-            pos = m.end()
-            continue
+    while m := _QUANT_PAT.search(text, pos):
         span = _quant_lhs_span(text, m.start())
         if span is None:
             pos = m.end()
@@ -1875,8 +1761,11 @@ def _rewrite_quantified(text: str) -> str:
                 "three-valued-logic-preserving rewrite here; use the "
                 "builder API's quantified forms")
         text = text[:span[0]] + repl + text[i:]
-        mask = sqltext.mask(text)
         pos = 0
+    return text
+
+
+_INITCAP_HEAD = re.compile(r"\binitcap\s*\(", re.I)
 
 
 def _rewrite_initcap(text: str) -> str:
@@ -1885,23 +1774,18 @@ def _rewrite_initcap(text: str) -> str:
     chars — 'nibh.enim@x' → 'Nibh.Enim@X', redshift.iq:1732); Spark's
     initcap splits on whitespace only. Per-character transform with a
     previous-char lookback — pure column algebra, no UDF."""
-    pat = re.compile(r"\binitcap\s*\(", re.I)
-    while True:
-        mask = sqltext.mask(text)
-        m = next((mm for mm in pat.finditer(text)
-                  if not mask[mm.start()]), None)
-        if m is None:
-            return text
-        i = sqltext.close(text, m.end() - 1)
-        if i is None:
-            return text
-        arg = text[m.end():i - 1]
-        repl = (
+    def repl(m: "re.Match[str]", args: "list[str]") -> str:
+        arg = ",".join(args)
+        return (
             f"array_join(transform(split({arg}, ''), (__c, __i) -> "
             f"CASE WHEN __i = 0 OR NOT substr({arg}, __i, 1) "
             f"rlike '[A-Za-z0-9]' THEN ucase(__c) ELSE lcase(__c) END), "
             f"'')")
-        text = text[:m.start()] + repl + text[i:]
+
+    return _calls(text, _INITCAP_HEAD, repl)
+
+
+_COUNT_HEAD = re.compile(r"\bcount\s*\(", re.I)
 
 
 def _rewrite_multiarg_count(text: str) -> str:
@@ -1909,37 +1793,23 @@ def _rewrite_multiarg_count(text: str) -> str:
     argument is non-null (SqlStdOperatorTable COUNT is multi-arg;
     agg.iq's "composite count" cases). Spark's COUNT takes one argument
     unless DISTINCT — rewrite to count(CASE WHEN ... THEN 1 END)."""
-    mask = sqltext.mask(text)
-    out, consumed = [], 0
-    for m in re.finditer(r"\bcount\s*\(", text, re.I):
-        if mask[m.start()]:
-            continue
-        end = sqltext.close(text, m.end() - 1)
-        if end is None:
-            continue
-        args = [a.strip() for a in sqltext.split(text[m.end():end - 1])]
+    def repl(m: "re.Match[str]", args: "list[str]") -> "str | None":
+        args = [a.strip() for a in args]
         if len(args) < 2 or re.match(r"distinct\b", args[0], re.I):
-            continue  # count(DISTINCT a, b) is native
+            return None  # count(DISTINCT a, b) is native
         cond = " AND ".join(f"({a}) IS NOT NULL" for a in args)
-        out.append(text[consumed:m.start()])
-        out.append(f"count(CASE WHEN {cond} THEN 1 END)")
-        consumed = end
-    out.append(text[consumed:])
-    return "".join(out)
+        return f"count(CASE WHEN {cond} THEN 1 END)"
+
+    return _calls(text, _COUNT_HEAD, repl)
+
+
+_ARRAY_HEAD = re.compile(r"\b(array|multiset)\s*\[", re.I)
 
 
 def _rewrite_array_literals(text: str) -> str:
     """ARRAY[a, b] / MULTISET[a, b] → array(a, b), innermost first."""
-    pat = re.compile(r"\b(array|multiset)\s*\[", re.I)
-    while True:
-        m = pat.search(text)
-        if not m:
-            return text
-        i = sqltext.close(text, m.end() - 1)
-        if i is None:
-            return text  # unbalanced — leave untouched
-        body = text[m.end():i - 1]
-        text = text[:m.start()] + "array(" + body + ")" + text[i:]
+    return _calls(text, _ARRAY_HEAD,
+                  lambda m, args: "array(" + ",".join(args) + ")")
 
 
 _MSET_OP = re.compile(
@@ -1960,7 +1830,8 @@ def _operand_back(text: str, end: int) -> int:
             j -= 1
         return j
     j = i
-    while j > 0 and (text[j - 1].isalnum() or text[j - 1] in "_.`"):
+    while j > 0 and (text[j - 1].isalnum()
+                     or text[j - 1] in "_.`" + _SENTINEL):
         j -= 1
     return j
 
@@ -1971,7 +1842,8 @@ def _operand_fwd(text: str, start: int) -> int:
     while i < len(text) and text[i].isspace():
         i += 1
     j = i
-    while j < len(text) and (text[j].isalnum() or text[j] in "_.`"):
+    while j < len(text) and (text[j].isalnum()
+                             or text[j] in "_.`" + _SENTINEL):
         j += 1
     while j < len(text) and text[j].isspace():
         j += 1
@@ -2031,9 +1903,7 @@ def _rewrite_values_exprs(text: str) -> str:
     rejected). Rewrite ``(VALUES (e1, e2), …) AS t(c1, c2)`` whose rows
     contain function calls into the equivalent
     ``(SELECT e1 AS c1, e2 AS c2 UNION ALL …) AS t``."""
-    mask = sqltext.mask(text)
-    matches = [m for m in _VALUES_OPEN.finditer(text) if not mask[m.start()]]
-    for m in reversed(matches):
+    for m in reversed(list(_VALUES_OPEN.finditer(text))):
         end = sqltext.close(text, m.start())
         if end is None:
             continue
@@ -2060,9 +1930,10 @@ def _rewrite_values_exprs(text: str) -> str:
     return text
 
 
-_RANKING_FNS = ("rank", "dense_rank", "row_number", "ntile",
-                "percent_rank", "cume_dist")
-_OVER_RE = re.compile(r"\bover\s*\(", re.I)
+# a ranking function call and the OVER that follows, up to its "("
+_RANK_OVER = re.compile(
+    r"\b(rank|dense_rank|row_number|ntile|percent_rank|cume_dist)"
+    r"\s*\(([^()]*)\)(\s*over\s*\()", re.I)
 
 
 def _rewrite_unordered_windows(text: str) -> str:
@@ -2076,57 +1947,28 @@ def _rewrite_unordered_windows(text: str) -> str:
     deptno)`` (:703) — i.e. every row ranks behind all its peers;
     ``count(*)`` over the same partition reproduces that exactly (and
     needs no ORDER BY)."""
-    mask = sqltext.mask(text)
-    out, consumed = [], 0
-    for m in _OVER_RE.finditer(text):
-        if mask[m.start()] or m.start() < consumed:
-            continue
-        # ranking function call directly before OVER?
-        head = text[:m.start()].rstrip()
-        fn = re.search(r"([a-z_]+)\s*\(([^()]*)\)$", head, re.I)
-        if not fn or fn.group(1).lower() not in _RANKING_FNS:
-            continue
-        j = sqltext.close(text, m.end() - 1)
-        if j is None:
-            continue
-        spec = text[m.end():j - 1]
-        if re.search(r"\border\s+by\b", spec, re.I):
-            continue
-        name = fn.group(1).lower()
-        out.append(text[consumed:fn.start()])
+    def repl(m: "re.Match[str]", args: "list[str]") -> "str | None":
+        spec = ",".join(args)
+        if _ORDER_BY_KW.search(spec):
+            return None
+        name = m.group(1).lower()
         if name in ("rank", "dense_rank"):
-            out.append("count(*)")
-            out.append(text[fn.end():j - 1])
-        else:
-            out.append(f"{name}({fn.group(2)})")
-            out.append(text[fn.end():j - 1])
-            out.append(" order by 1" if spec.strip() else "order by 1")
-        consumed = j - 1
-    out.append(text[consumed:])
-    return "".join(out)
+            return f"count(*){m.group(3)}{spec})"
+        return (f"{name}({m.group(2)}){m.group(3)}{spec}"
+                + (" order by 1)" if spec.strip() else "order by 1)"))
+
+    return _calls(text, _RANK_OVER, repl)
+
+
+_MINMAX_HEAD = re.compile(r"\b(greatest|least)\s*\(", re.I)
 
 
 def _rewrite_unary_minmax(text: str) -> str:
     """Calcite accepts 1-argument GREATEST/LEAST (identity;
     redshift.iq:859); Spark demands at least two arguments — unwrap the
     single-argument form."""
-    pat = re.compile(r"\b(greatest|least)\s*\(", re.I)
-    while True:
-        mask = sqltext.mask(text)
-        m = next((mm for mm in pat.finditer(text) if not mask[mm.start()]),
-                 None)
-        if m is None:
-            return text
-        j = sqltext.close(text, m.end() - 1)
-        if j is None:
-            return text
-        if sqltext.top(text[m.end():j - 1], ","):
-            # ≥ 2 args: leave it (rescan from the end of this call)
-            head, tail = text[:j], text[j:]
-            tail = _rewrite_unary_minmax(tail)
-            return head + tail
-        text = (text[:m.start()] + "(" + text[m.end():j - 1].strip() + ")"
-                + text[j:])
+    return _calls(text, _MINMAX_HEAD, lambda m, args: None if len(args) > 1
+                  else "(" + args[0].strip() + ")")
 
 
 _SEEDED_RAND = re.compile(
@@ -2169,15 +2011,41 @@ def _rewrite_seeded_rand(text: str) -> str:
     return _SEEDED_RAND.sub(sub, text)
 
 
+# Calcite calls that Spark spells differently: the head as written →
+# Spark's opening; the arguments follow, then one ")" per "(" opened.
+_RENAMES = {
+    "collect(": "collect_list(",          # SqlStdOperatorTable.java:2165
+    "fusion(": "flatten(collect_list(",   # the multiset-union aggregate
+    "row(": "struct(",  # SqlStdOperatorTable.java:1176; renders {a, b}
+    "map[": "map(",     # MAP_VALUE_CONSTRUCTOR; winagg.iq:482
+    # Spark 4.1's native st_setsrid/st_srid builtins cannot be replaced
+    # by SQL UDFs: the '2'-suffixed registrations (functions/geo_sqlfn.py)
+    "st_setsrid(": "ST_SetSRID2(",
+    "st_srid(": "ST_SRID2(",
+}
+_RENAME_HEAD = re.compile("|".join(
+    rf"\b{head[:-1]}\s*\{head[-1]}" for head in [*_RENAMES, "group_id("]),
+    re.I)
+
+
+def _rename(m: "re.Match[str]", args: "list[str]") -> "str | None":
+    head = re.sub(r"\s+", "", m.group(0)).lower()
+    if head == "group_id(":
+        # Calcite de-duplicates grouping sets, so GROUP_ID() is 0 (see
+        # the grouping-function glue)
+        return None if "".join(args).strip() else "0"
+    return _RENAMES[head] + ",".join(args) + ")" * _RENAMES[head].count("(")
+
+
 def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
             nulls_high: bool = True) -> str:
     """Apply the Calcite-dialect rewrites; returns plain Spark SQL."""
     text = text.rstrip().rstrip(";")
-    # shield string-literal CONTENTS for the whole pipeline: no rewrite
-    # below can see (or corrupt) keyword-looking text inside '...'
-    # (round-8 fuzzer finding: 9 of 11 token rewrites matched inside
-    # literals — 'has pi here' became 'has pi() here', etc.)
-    text, _lits = _shield_literals(text)
+    # every quoted token is one opaque placeholder for the whole
+    # pipeline: no pass below sees inside a literal or a quoted name
+    # ('has pi here' stays, and so does "floor(d to day)"); the passes
+    # that need a name read it from `shielded`
+    text, shielded = _shield(text)
     # JDBC escape syntax (Calcite Parser.jj JdbcFunctionCall /
     # date-time escapes; misc.iq:2098): {ts '...'} / {d '...'} /
     # {t '...'} are typed literals, {fn f(args)} unwraps to the call.
@@ -2190,17 +2058,14 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
             text, flags=re.I)
         text = re.sub(r"\{\s*fn\s+([^{}]*)\}", r"\1", text, flags=re.I)
     # JSON constructors/aggregates first (they emit their own shielded
-    # fragments and must see the original literal keys via _lits)
-    if _JSON_CALL.search(text):
-        text = _rewrite_json_calls(text, _lits)
-    if _JSON_EXISTS.search(text):
-        text = _rewrite_json_exists(text, _lits)
+    # fragments and must see the original literal keys)
+    text = _rewrite_json_calls(text, shielded)
+    text = _rewrite_json_exists(text, shielded)
     if re.search(r"\*\s*interval\b", text, re.I):
-        text = _rewrite_interval_products(text, _lits)
-    if _PERIOD_CTOR.search(text):
-        text = _rewrite_period_ctor(text, _lits)
+        text = _rewrite_interval_products(text, shielded)
+    text = _rewrite_period_ctor(text, shielded)
     if _SEQ_REF.search(text):
-        text = _rewrite_sequences(text)
+        text = _rewrite_sequences(text, shielded)
     if re.search(r"\bgroup(ing)?_?", text, re.I):
         # GROUPING()/GROUPING_ID() over a PLAIN group by (no rollup/
         # cube/grouping sets): every argument is fully grouped, so the
@@ -2208,8 +2073,7 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
         # functions outside multi-grouping queries, Calcite does not
         if not re.search(r"\b(rollup|cube|grouping\s+sets)\b", text, re.I) \
                 and re.search(r"\bgroup\s+by\b", text, re.I):
-            text = re.sub(r"\bgrouping(_id)?\s*\([^()]*\)", "0", text,
-                          flags=re.I)
+            text = _calls(text, _GROUPING_HEAD, lambda m, args: "0")
         text = _rewrite_having_grouping(text)
         text = _rewrite_orderby_grouping(text)
         text = _rewrite_grouping_funcs(text)
@@ -2218,8 +2082,7 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
     text = re.sub(r"\(\s*table\s+([^)]+)\)", r"(select * from \1)", text,
                   flags=re.I)
     for schema, prefix in (schema_views or {}).items():
-        text = _rewrite_schema_refs(text, schema, prefix)
-    text = _rewrite_dquote_idents(text)
+        text = _rewrite_schema_refs(text, schema, prefix, shielded)
     # IS [NOT] UNKNOWN — for a BOOLEAN operand this is exactly IS [NOT]
     # NULL (SqlStdOperatorTable IS_UNKNOWN; sub-query.iq's project-IN
     # battery); Spark has no UNKNOWN spelling
@@ -2240,14 +2103,11 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
     # FLOOR-to-unit rewrite consumes the FLOOR comparison forms
     if re.search(r"\bextract\s*\(\s*(year|quarter|month)\b|\byear\s*\("
                  r"|\b(floor|ceil|ceiling)\s*\(", text, re.I):
-        text = _rewrite_date_ranges(text, _lits)
+        text = _rewrite_date_ranges(text, shielded)
     text = _rewrite_floor_to(text)
-    if re.search(r"\btumble", text, re.I):
-        text = _rewrite_tumble(text, _lits)
-    if re.search(r"\bhop(_start|_end)?\s*\(", text, re.I):
-        text = _rewrite_hop(text, _lits)
-    if re.search(r"\bsession(_start|_end)?\s*\(", text, re.I):
-        text = _rewrite_session(text, _lits)
+    text = _rewrite_tumble(text, shielded)
+    text = _rewrite_hop(text, shielded)
+    text = _rewrite_session(text, shielded)
     # SELECT DISTINCT ... ORDER BY <aggregate> (CALCITE-634, sort.iq:189):
     # Spark rejects ordering a DISTINCT by an expression not in the
     # output — when the identical expression is ALIASED in the select
@@ -2298,9 +2158,8 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
         r"\bcollect\s*\(([^()]*)\)\s*within\s+group\s*\(\s*order\s+by\s+"
         r"(.+?)(?:\s+(asc|desc))?\s*\)(\s*filter\s*\([^()]*\))?",
         _collect_wg, text, flags=re.I)
-    # COLLECT → collect_list; FUSION → flatten(collect_list(..))
-    # (SqlStdOperatorTable.java:2165; FUSION multiset-union aggregate)
-    text = re.sub(r"\bcollect\s*\(", "collect_list(", text, flags=re.I)
+    # COLLECT, FUSION, ROW, MAP[…], ST_SetSRID, ST_SRID, GROUP_ID()
+    text = _calls(text, _RENAME_HEAD, _rename)
     text = _rewrite_initcap(text)
     # (s1, e1) OVERLAPS (s2, e2) — Calcite's convertlet normalizes each
     # pair (swap when start > end) and tests inclusive intersection
@@ -2310,16 +2169,12 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
         r"(least(\1,\2) <= greatest(\3,\4)"
         r" and least(\3,\4) <= greatest(\1,\2))",
         text, flags=re.I)
-    text = _wrap_call(text, "fusion", "flatten(collect_list(", ")")
     # GROUP BY () = the single global group
     text = re.sub(r"\bgroup\s+by\s+\(\)", "", text, flags=re.I)
     # ARRAY[..] / MULTISET[..] literal constructors → array(..)
     # (SqlStdOperatorTable.java:2038-2045; MULTISET = unordered ArrayType
     # per SURVEY §1.2 — the quidem comparator applies multiset equality)
     text = _rewrite_array_literals(text)
-    # MAP[k, v, ...] literal constructor → map(k, v, ...)
-    # (SqlStdOperatorTable MAP_VALUE_CONSTRUCTOR; winagg.iq:482)
-    text = re.sub(r"\bmap\s*\[([^\]]*)\]", r"map(\1)", text, flags=re.I)
     # FROM-item UNNEST of a map → Spark's explode generator subquery
     # (Calcite's Uncollect over a MAP yields (KEY, VALUE) columns —
     # SqlUnnestOperator; winagg.iq:482 CALCITE-2271). Array unnest in
@@ -2343,10 +2198,8 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
     if re.search(r"\brand", text, flags=re.I):
         text = _rewrite_seeded_rand(text)
     # Spatial dialect glue (functions/geo_sqlfn.py): Calcite's GEOMETRY
-    # type is this engine's ESRI-JSON string; Spark 4.1's native
-    # st_setsrid/st_srid builtins cannot be replaced by SQL UDFs, so
-    # the Calcite spellings map onto the '2'-suffixed registrations;
-    # VALUES rows with function calls become UNION ALL selects.
+    # type is this engine's ESRI-JSON string; VALUES rows with function
+    # calls become UNION ALL selects.
     text = re.sub(r"\bas\s+geometry\b", "as string", text, flags=re.I)
     # Calcite accepts length-less VARCHAR in CAST (unbounded); Spark
     # demands VARCHAR(n) — map the bare form to STRING
@@ -2358,14 +2211,9 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
     # (?<!extract-from) guard is unnecessary because EXTRACT spells its
     # unit BEFORE 'from', never as `time '...'`.
     text = re.sub(r"\btime\s+(')", r"\1", text, flags=re.I)
-    text = re.sub(r"\bst_setsrid\s*\(", "ST_SetSRID2(", text, flags=re.I)
-    text = re.sub(r"\bst_srid\s*\(", "ST_SRID2(", text, flags=re.I)
     text = _rewrite_values_exprs(text)
     text = _rewrite_unordered_windows(text)
     text = _rewrite_unary_minmax(text)
-    # ROW(a, b) value constructor → struct(a, b)
-    # (SqlStdOperatorTable.java:1176; rendering stays Calcite's {a, b})
-    text = re.sub(r"\brow\s*\(", "struct(", text, flags=re.I)
     text = _rewrite_multiarg_count(text)
     if nulls_high:
         text = _rewrite_nulls_high(text)
@@ -2377,7 +2225,7 @@ def rewrite(text: str, *, schema_views: "dict[str, str] | None" = None,
             text = re.sub(r"^\s*values\b", "select", text, flags=re.I)
     if _GROUP_BY_KW.search(text):
         text = _rewrite_group_ordinals(text)
-    return _unshield_literals(text, _lits)
+    return _unshield(text, shielded)
 
 
 def calcite_sql(spark: SparkSession, text: str, *,
@@ -2438,11 +2286,13 @@ def calcite_sql(spark: SparkSession, text: str, *,
     # statement sees fresh values. The returned df bakes the base as a
     # literal, so re-execution stays stable; the extra count pass is the
     # documented cost of session sequences (catalog.py contract).
-    next_refs = [m for m in _SEQ_REF.finditer(text)
-                 if m.group(1).lower() == "next"]
+    text, shielded = _shield(text)
+    next_refs = {_seq_name(m.group(2), shielded)
+                 for m in _SEQ_REF.finditer(text)
+                 if m.group(1).lower() == "next"}
     if next_refs:
         from drill_calcite_spark.catalog import advance_sequence
         n = df.count()
-        for name in {_seq_name(m.group(2)) for m in next_refs}:
+        for name in next_refs:
             advance_sequence(name, n)
     return df

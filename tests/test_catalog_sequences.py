@@ -36,3 +36,20 @@ def test_concurrent_advance_loses_no_increments():
     for t in threads:
         t.join()
     assert get_sequence(name)["next"] == 1 + 2 * per_thread * 3
+
+
+def test_quoted_sequence_name(spark):
+    """NEXT VALUE FOR reads a quoted sequence name the way Calcite does
+    (case folded for the flat registry), and the statement advances
+    that sequence by its row count; the words inside a string literal
+    advance nothing."""
+    from drill_calcite_spark.sql import calcite_sql
+
+    create_sequence("quoted_probe_seq", start=10, increment=2)
+    df = calcite_sql(spark, 'select next value for "Quoted_Probe_Seq" as v '
+                     "from (values (1), (2)) as t(x)")
+    assert sorted(r.v for r in df.collect()) == [10, 12]
+    assert get_sequence("quoted_probe_seq")["next"] == 14
+    df = calcite_sql(spark, "select 'next value for quoted_probe_seq' as s")
+    assert df.collect()[0].s == "next value for quoted_probe_seq"
+    assert get_sequence("quoted_probe_seq")["next"] == 14

@@ -248,14 +248,23 @@ def _rt_exprs_for_seed(seed: int, n: int = 12) -> list[str]:
 def test_front_door_roundtrip_keyword_literals(spark, duck, fuzz_tables,
                                                seed):
     """rewrite() must be a byte-identity on dialect-free text whatever
-    the literals contain, and the rewritten SQL must execute on Spark
-    with results identical to DuckDB running the ORIGINAL text."""
+    the literals and quoted aliases contain (a quoted name only trades
+    its double quotes for backticks), and the rewritten SQL must execute
+    on Spark with results identical to DuckDB running the ORIGINAL
+    text."""
     from drill_calcite_spark.sql import calcite_sql, rewrite
 
     exprs = _rt_exprs_for_seed(seed)
-    select = ", ".join(f"{e} AS c{k}" for k, e in enumerate(exprs))
-    sql = f"select id, {select} from fuzz_t order by id"
-    assert rewrite(sql, nulls_high=False) == sql, (
+    names = random.Random(seed).sample(_KEYWORD_LITS, len(exprs) // 3)
+
+    def statement(quote: str) -> str:
+        select = ", ".join(
+            f"{e} AS {quote}{names[k // 3]}{quote}" if k % 3 == 2
+            else f"{e} AS c{k}" for k, e in enumerate(exprs))
+        return f"select id, {select} from fuzz_t order by id"
+
+    sql = statement('"')
+    assert rewrite(sql, nulls_high=False) == statement("`"), (
         "token rewrites altered dialect-free text (literal corruption?)")
     srows = [tuple(r)
              for r in calcite_sql(spark, sql, nulls_high=False).collect()]

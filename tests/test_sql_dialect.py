@@ -317,6 +317,11 @@ def test_hop_rejects_bad_forms():
                 "interval '2' hour) from t group by window, "
                 "hop(ts, interval '1' hour, interval '2' hour)",
                 nulls_high=False)
+    with pytest.raises(TumbleUnsupported):  # the same name, quoted
+        rewrite('select "window", hop_start(ts, interval \'1\' hour, '
+                'interval \'2\' hour) from t group by "window", '
+                'hop(ts, interval \'1\' hour, interval \'2\' hour)',
+                nulls_high=False)
 
 
 def test_session_rejects_name_shadow():
@@ -326,6 +331,11 @@ def test_session_rejects_name_shadow():
         rewrite("select t.session_window, session_start(ts, "
                 "interval '30' minute) from t group by t.session_window, "
                 "session(ts, interval '30' minute)", nulls_high=False)
+    with pytest.raises(TumbleUnsupported):  # the same name, quoted
+        rewrite('select t."session_window", session_start(ts, '
+                'interval \'30\' minute) from t group by '
+                't."session_window", session(ts, interval \'30\' minute)',
+                nulls_high=False)
 
 
 def test_session_rewrites_to_session_window():
@@ -846,7 +856,7 @@ def test_front_door_leaves_group_by_ordinal_to_other_clients(spark):
 def test_quoted_identifiers_are_opaque_to_scans(spark):
     """Brackets and commas inside a quoted identifier are part of the
     name: they neither end an ORDER BY item, nor add a LISTAGG argument,
-    nor end a GROUP BY key."""
+    nor end a GROUP BY key; a quoted name is never a function call."""
     from drill_calcite_spark.sql import calcite_sql
 
     df = calcite_sql(spark, 'select "a)" from (values (2), (1)) '
@@ -857,6 +867,9 @@ def test_quoted_identifiers_are_opaque_to_scans(spark):
     assert sorted(df.collect()[0].s.split(",")) == ["p", "q"]
     assert rewrite('select "c(", count(*) from t group by "c(", 1') \
         .endswith("group by `c(`, CAST(1 AS INT)")
+    # a quoted name is never read as code, here the niladic PI
+    df = calcite_sql(spark, 'select "pi" from (values (1)) as t("pi")')
+    assert df.columns == ["pi"] and [r[0] for r in df.collect()] == [1]
 
 
 def test_order_by_non_ascii_name():
@@ -869,3 +882,26 @@ def test_order_by_non_ascii_name():
 def test_quote_inside_quoted_identifier_opens_no_literal():
     assert rewrite("""select 1 as "it's", 'x' as y from t""") == (
         "select 1 as `it's`, 'x' as y from t")
+
+
+# quoted identifiers whose names read as the dialect forms that a pass
+# rewrites (or, for the sequence, looks up); each stays one name
+_CODE_LIKE_NAMES = [
+    "pi", "floor(d to day)", "row(x)", "collect(x)", "map[1,2]", "array[1]",
+    "tumble_start(ts, interval '1' hour)", "period(a, b)",
+    "grouping_id(a, b)", "st_srid(g)", "a is unknown", "(table u)",
+    "as varchar)", "group by ()", "next value for s",
+]
+
+
+@pytest.mark.parametrize("name", _CODE_LIKE_NAMES)
+def test_quoted_identifier_is_never_rewritten(name):
+    assert rewrite(f'select "{name}" from t') == f"select `{name}` from t"
+
+
+def test_many_calls_rewrite_without_recursion():
+    """The calls of a statement are walked by a loop: a statement with
+    more calls than Python's recursion limit rewrites."""
+    text = ("select " + ", ".join(["greatest(a, b)"] * 1200)
+            + " from t")
+    assert rewrite(text) == text
